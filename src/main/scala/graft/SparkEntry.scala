@@ -174,10 +174,10 @@ object SparkEntry {
     "q_agg_lineitem" -> ((s, dir) => {
       // floor(x*100 + 0.5) instead of round(x*100): Spark's Round on
       // DoubleType goes through BigDecimal.valueOf (a Double.toString
-      // parse) PER ROW, while floor is one fused double op; for positive
-      // values below 2^52 the two are provably equal (shortest-decimal
-      // HALF_UP == +0.5-then-floor), and ProbeRound verified 0 mismatches
-      // over every money column at every SF
+      // parse) PER ROW, while floor is one fused double op. The two differ
+      // in general (x*100 just below a .5 boundary, e.g.
+      // 0.49999999999999994, floors up after +0.5 but rounds down); they
+      // are verified equal on this data, pinned by MoneyRoundingSpec
       pq(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -336,7 +336,7 @@ object SparkEntry {
       // count the class matches instead of materializing the rewritten
       // string: size(regexp_extract_all(text, '[0-9]')) equals
       // length(regexp_replace(text, '[^0-9]', '')) but skips building a
-      // near-full copy of every row (ProbeExpr A/B: 0.140s vs 0.207s)
+      // near-full copy of every row (interleaved A/B: 0.140s vs 0.207s)
       pq(s, dir, "documents")
         .select(
           col("doc_id"),

@@ -55,18 +55,6 @@ object ApplyPlanner {
   private def srcName(spec: TableSpec, c: String): String =
     spec.config.sourceNames.getOrElse(c, c)
 
-  /** @param dedup when false, skip the pre-merge LWW dedup (2 shuffles):
-    *   the snapshot merge's per-key max_by reduction subsumes it. Leave true
-    *   when the batch feeds a CAS gate (CAS must see one candidate per key,
-    *   like the reference's dedup-before-apply, apply.go:148-151) or when
-    *   the batch is consumed by anything other than SnapshotTable.merge.
-    */
-  /** @param observedFields when the caller already knows the window's
-    *   payload field set (the staging layer records it per batch while
-    *   writing — StagedStore.append's riding summary), pass it here and the
-    *   planner skips its own summary scan entirely. Key-arity / missing-PK
-    *   validation is then the stager's responsibility.
-    */
   /** Synthetic PK column for tables declared WITHOUT a primary key,
     * mirroring the reference's rowid synthesis
     * (internal/target/schemawatch/coldata.go:147-182): the target schema
@@ -86,6 +74,19 @@ object ApplyPlanner {
     */
   val InferenceSampleRows = 1024
 
+  /** Plan `window` into a merge batch.
+    *
+    * @param dedup when false, skip the pre-merge LWW dedup (2 shuffles):
+    *   the snapshot merge's per-key max_by reduction subsumes it. Leave true
+    *   when the batch feeds a CAS gate (CAS must see one candidate per key,
+    *   like the reference's dedup-before-apply, apply.go:148-151) or when
+    *   the batch is consumed by anything other than SnapshotTable.merge.
+    * @param observedFields when the caller already knows the window's
+    *   payload field set (staging records it per batch while writing — the
+    *   [[DriftSummary]] riding StagedStore's append), pass it here and the
+    *   planner skips its own summary scan entirely. Key-arity / missing-PK
+    *   validation is then the stager's responsibility.
+    */
   def plan(
       spark: SparkSession,
       specIn: TableSpec,
@@ -112,41 +113,17 @@ object ApplyPlanner {
 
     // ---- drift truth table ----------------------------------------------
     // one summary pass, unless the field set was already collected while
-    // staging. Avoids materializing payload VALUES either way:
-    // json_object_keys walks the top-level keys without copying KB-sized
-    // contents; the PK probe is a per-column path extraction.
+    // staging. A synthetic-rowid table accepts any key shape (0 or 1
+    // values) and never requires the PK in the payload — the rowid is
+    // engine-made — so it is summarized but not checked.
     val fields: Seq[String] = observedFields.getOrElse {
-      val missingPkCond = col("data").isNotNull &&
-        pkSrcNames
-          .map(n => get_json_object(col("data"), s"$$.$n").isNull)
-          .reduce(_ || _)
-      val summaryRow = window
-        .agg(
-          collect_set(size(keyArr)).as("arities"),
-          array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-            .as("fields"),
-          max(when(missingPkCond, 1).otherwise(0)).as("missing_pk")
-        )
-        .collect()(0)
-      // a synthetic-rowid table accepts any key shape (0 or 1 values) and
-      // never requires the PK in the payload — the rowid is engine-made
-      if (!syntheticPk) {
-        val arities = summaryRow.getSeq[Int](0)
-        val missingPk = !summaryRow.isNullAt(2) && summaryRow.getInt(2) == 1
-        val expect = spec.pkCols.size
-        arities.find(_ != expect).foreach { got =>
-          throw new SchemaDriftException(
-            s"the mutation key has $got values, expected $expect"
-          )
-        }
-        if (missingPk) {
-          throw new SchemaDriftException(
-            s"missing primary-key column in payload; expected all of " +
-              pkSrcNames.mkString("[", ", ", "]")
-          )
-        }
-      }
-      summaryRow.getSeq[String](1)
+      val topic = DriftSummary.OneTable
+      val aggs = DriftSummary.columns(lit(topic),
+        if (syntheticPk) Map.empty else Map(topic -> pkSrcNames))
+      val row = window.agg(aggs.head, aggs.tail: _*).collect()(0)
+      val summary = DriftSummary.decode(row.getAs[Any](_)).getOrElse(topic, DriftSummary.Empty)
+      if (!syntheticPk) DriftSummary.check(topic, summary, spec.pkCols.size, pkSrcNames)
+      summary.fields.toSeq.sorted
     }
 
     val knownFields: Set[String] =
@@ -450,12 +427,9 @@ object ApplyPlanner {
     * strictly greater than the current row's. Deletes pass unconditionally
     * (the reference's delete path has no CAS — queries/delete.tmpl).
     * Mirrors queries/conditional.tmpl:48-75.
-    */
-  /** CAS gate against a [[graft.table.SnapshotTable]] with the current-row
-    * read pruned to the batch's touched buckets — at scale an unpruned read
-    * is a full-table scan per fence. Shared by the single-table and
-    * multi-table loops (the reference applies per-table apply-config
-    * identically on both paths: apply.go:148-191 is per-Applier). The batch
+    *
+    * The current-row read is pruned to the batch's touched buckets — at
+    * scale an unpruned read is a full-table scan per fence. The batch
     * is cached for the two passes (bucket discovery + join); call the
     * returned `cleanup` after the merge has consumed the result.
     */
@@ -564,6 +538,92 @@ object ApplyPlanner {
           sum(when(casCond(casColumns), 1L).otherwise(0L)),
           lit(0L)
         ).as("n_accepted")
+      )
+  }
+}
+
+/** The drift truth table of a batch of mutations — key arities, payload
+  * field set and primary-key presence — per routing topic, defined ONCE:
+  * staging observes it on the very write that stages the batch
+  * ([[graft.stage.StagedStore]]), and [[ApplyPlanner.plan]] aggregates it
+  * when no staged summary exists (immediate mode, ad-hoc windows). Each
+  * aggregate keys its values by topic, so a multi-table batch pays the same
+  * three aggregate expressions as a single table. Only top-level payload
+  * keys are walked (`json_object_keys`), never the KB-sized values; the PK
+  * probe is a per-column path extraction.
+  */
+object DriftSummary {
+
+  /** One topic's summary. */
+  final case class Summary(arities: Set[Int], fields: Set[String], missingPk: Boolean)
+
+  val Empty: Summary = Summary(Set.empty, Set.empty, missingPk = false)
+
+  /** Topic name of a single-table batch (its errors carry no topic tag). */
+  val OneTable = ""
+
+  private val Arities = "drift_arities"
+  private val Fields = "drift_fields"
+  private val MissingPk = "drift_missing_pk"
+
+  /** The three aggregate columns over `(key, data)` rows. `topic` routes
+    * each row (a literal for a single table); `pkSrc` maps a topic to the
+    * payload names of its PK columns — topics absent from it, or mapped to
+    * no names, are never PK-probed.
+    */
+  def columns(topic: Column, pkSrc: Map[String, Seq[String]]): Seq[Column] = {
+    val missingPk = pkSrc.foldLeft(lit(false)) { case (acc, (t, names)) =>
+      if (names.isEmpty) acc
+      else
+        when(
+          topic === t,
+          col("data").isNotNull &&
+            names.map(n => get_json_object(col("data"), s"$$.$n").isNull).reduce(_ || _)
+        ).otherwise(acc)
+    }
+    Seq(
+      collect_set(struct(topic, size(from_json(col("key"), ArrayType(StringType)))))
+        .as(Arities),
+      collect_set(struct(topic, expr("json_object_keys(data)"))).as(Fields),
+      collect_set(when(missingPk, topic)).as(MissingPk)
+    )
+  }
+
+  /** Per-topic summaries from the aggregates' values, looked up by column
+    * name (`Row.getAs` or an Observation's metrics map). Topics with no
+    * rows are absent.
+    */
+  def decode(get: String => Any): Map[String, Summary] = {
+    def rows(name: String): collection.Seq[org.apache.spark.sql.Row] =
+      Option(get(name)).map(_.asInstanceOf[collection.Seq[org.apache.spark.sql.Row]])
+        .getOrElse(Nil)
+    // a null key parses to no arity and a delete's null payload to no keys;
+    // neither is evidence of drift
+    val arities = rows(Arities).filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getInt(1))
+    val fields = rows(Fields).filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getSeq[String](1))
+    val missing =
+      Option(get(MissingPk)).map(_.asInstanceOf[collection.Seq[String]].toSet).getOrElse(Set.empty)
+    (arities.map(_._1) ++ fields.map(_._1)).distinct.map { t =>
+      t -> Summary(
+        arities.collect { case (`t`, a) => a }.toSet,
+        fields.collect { case (`t`, f) => f }.flatten.toSet,
+        missing.contains(t)
+      )
+    }.toMap
+  }
+
+  /** Throw [[SchemaDriftException]] when `s` breaks the expected key arity
+    * or lacks a PK column in some payload (reference: apply.go:285-371).
+    */
+  def check(topic: String, s: Summary, pkArity: Int, pkSrc: Seq[String]): Unit = {
+    val tag = if (topic == OneTable) "" else s"[$topic] "
+    s.arities.find(_ != pkArity).foreach { got =>
+      throw new SchemaDriftException(s"${tag}the mutation key has $got values, expected $pkArity")
+    }
+    if (s.missingPk)
+      throw new SchemaDriftException(
+        s"${tag}missing primary-key column in payload; expected all of " +
+          pkSrc.mkString("[", ", ", "]")
       )
   }
 }

@@ -31,8 +31,8 @@ object ExplainMain {
       .map(i => (s"""["k$i"]""", s"""{"k":"v$i"}""", i.toLong, 0, "f"))
       .toDF("key", "data", "nanos", "logical", "src_file")
     stage.append(muts, 1L)
-    println("=== StagedStore.selectWindow(2000, 5000) ===")
-    stage.selectWindow(Hlc(2000, 0), Hlc(5000, 0)).explain("formatted")
+    println("=== StagedStore.selectWindowRaw(2000, 5000) ===")
+    stage.selectWindowRaw(Hlc(2000, 0), Hlc(5000, 0)).explain("formatted")
 
     // merge-on-read, bucket-local reads: a table with a delta in ONE
     // bucket must read its other buckets raw — expect NO Exchange in the

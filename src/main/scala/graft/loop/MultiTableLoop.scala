@@ -3,8 +3,8 @@ package graft.loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.applyops.{ApplyPlanner, TableSpec}
-import graft.feed.{Changefeed, Envelopes}
+import graft.applyops.TableSpec
+import graft.feed.Envelopes
 import graft.model.Hlc
 import graft.stage.StagedStore
 import graft.table.SnapshotTable
@@ -24,9 +24,9 @@ final case class TableTarget(
   * one transaction (reference: internal/source/cdc/webhook.go:117-164), the
   * resolver drains tables level-by-level per `SchemaData.Order`
   * (resolver.go:375-386). Here one `foreachBatch` is the transaction; FK
-  * levels are applied as sequential merges (parallel within a level would
-  * also be safe — tables in a level are independent — kept sequential for
-  * deterministic commit versions).
+  * levels apply in order, and the tables within a level concurrently.
+  * Staging ([[StagedStore.appendTopics]]) and each table's apply step
+  * ([[Applier]]) are the ones [[ReplayLoop]] uses.
   *
   * Each table keeps its own staging store and snapshot table; the fence is
   * global (webhook resolved markers cover every topic, like the reference's
@@ -54,8 +54,8 @@ final class MultiTableLoop(
       * targets: below it, each topic's merge re-filters the batch's raw
       * text (T cheap re-scans — measured faster than any materialization
       * at small T); at or above it, ONE job splits the parsed batch into
-      * per-topic parquet partitions (the same shape appendMultiTopic gives
-      * the staged path) and each merge does a partition-pruned read, so a
+      * per-topic parquet partitions (as staging splits the staged path's
+      * batch in one job) and each merge does a partition-pruned read, so a
       * many-table fan (the reference runs dozens of tables across 16
       * shards, fan_workers.go:136-194) parses the batch once, not T times.
       */
@@ -93,15 +93,7 @@ final class MultiTableLoop(
     FkLevels.levels(targets.keys.toSeq.sorted, dependsOn)
 
   def committedFence: Hlc =
-    targets.values
-      .map(t =>
-        t.table.log
-          .latest()
-          .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-          .getOrElse(Hlc.Zero)
-      )
-      .minOption
-      .getOrElse(Hlc.Zero)
+    targets.values.map(t => ReplayLoop.fenceOf(t.table)).minOption.getOrElse(Hlc.Zero)
 
   /** Topics that still hold staged data in partitions beyond their committed
     * fence — the startup-discovery analog of the reference's pending-schema
@@ -111,62 +103,29 @@ final class MultiTableLoop(
   def pendingTopics(): Seq[String] =
     targets.toSeq
       .filter { case (_, t) =>
-        val fence = t.table.log
-          .latest()
-          .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-          .getOrElse(Hlc.Zero)
         t.stage
           .maxStagedBucket()
-          .exists(_ > t.stage.bucketOfNanos(fence.nanos))
+          .exists(_ > t.stage.bucketOfNanos(ReplayLoop.fenceOf(t.table).nanos))
       }
       .map(_._1)
       .sorted
 
+  private def applier(topic: String): Applier =
+    new Applier(spark, targets(topic), saltBuckets,
+      changelogDir.map(d => s"$d/$topic"), vacuumKeepVersions)
+
   def processBatch(linesRaw: DataFrame, batchId: Long): Unit = {
-    // NOT cached: the one-pass multi-topic staging reads the batch once and
-    // the resolved scan re-reads only "resolved"-bearing lines — re-scanning
-    // text beats building a columnar cache (see ReplayLoop.processBatch)
-    processBatchCached(
-      linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE)),
-      batchId
-    )
-  }
-
-  private def processBatchCached(lines: DataFrame, batchId: Long): Unit = {
-    val parsed = parse(lines)
-    val muts = parsed.filter(!col(Changefeed.RESOLVED))
-
-    // batch identity = source-file-set hash, not the engine batch id: a
-    // wiped checkpoint renumbers batches from 0, and an id-keyed marker
-    // would wrongly skip a NEW batch reusing an old id (see ReplayLoop)
-    val files = ReplayLoop.distinctFiles(lines)
-    val stageKey =
-      if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
-
-    // cheap second scan; every supported envelope spells its marker with a
-    // "resolved" key, so the substring prefilter holds for any codec
-    val resolvedRows = parse(lines.filter(col("value").contains("\"resolved\"")))
-      .filter(col(Changefeed.RESOLVED))
-      .agg(max(struct(col("nanos"), col("logical"))).as("m"))
-      .collect()
-    val newResolved: Option[Hlc] =
-      if (resolvedRows.isEmpty || resolvedRows(0).isNullAt(0)) None
-      else {
-        val r = resolvedRows(0).getStruct(0)
-        Some(Hlc(r.getLong(0), r.getInt(1)))
-      }
+    val b = BatchPrelude(linesRaw, batchId, parse)
 
     if (immediate) {
-      applyImmediate(muts, stageKey, batchId, newResolved)
+      applyImmediate(b, batchId)
       return
     }
 
-    // stage EVERY table's slice in one Spark job (idempotent per batch):
-    // partitionBy(topic, ts_bucket) + a single per-topic drift aggregation
-    // replaces the T-pass per-topic append loop
-    StagedStore.appendMultiTopic(
-      muts.select("topic", "key", "data", "nanos", "logical", "src_file"),
-      stageKey,
+    // stage EVERY table's slice in one Spark job (idempotent per batch)
+    StagedStore.appendTopics(
+      b.mutations.select("topic", "key", "data", "nanos", "logical", "src_file"),
+      b.stageKey,
       stores = targets.map { case (topic, t) => topic -> t.stage },
       // PK-less topics synthesize a rowid at plan time — no key-arity /
       // PK-presence validation while staging
@@ -177,126 +136,45 @@ final class MultiTableLoop(
       }
     )
 
-    newResolved.foreach { target =>
-      // FK order: parents before children, level by level; tables WITHIN a
-      // level are independent, so their merges run concurrently (each is
-      // its own Spark job chain — the scheduler interleaves them, which
-      // keeps the cluster busy when a level has many small tables, the
-      // reference's fan-shards analog, fan_workers.go:136-194)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      levelOrder.foreach { level =>
-        val merges = level.map { topic =>
-          Future {
-            val t = targets(topic)
-            val fence = t.table.log
-              .latest()
-              .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-              .getOrElse(Hlc.Zero)
-            if (target > fence) {
-              // bounded window + late-delivery branch, as in ReplayLoop:
-              // (fence, target] plus anything staged since the last merge
-              val mergedThroughSeq: Long = t.table.log
-                .latest()
-                .flatMap(_.metric("merged_through_seq"))
-                .getOrElse(0L)
-              val seqNow = t.stage.currentSeq()
-              val window =
-                t.stage.selectWindow(fence, target, Some(mergedThroughSeq))
-              // per-table apply config (CAS, deadlines, exprs) applies on
-              // the fan path exactly as on the single-table path — the
-              // reference's per-Applier config is shared by serial and fan
-              // events (internal/target/apply/apply.go:148-191)
-              val planned = ApplyPlanner.plan(
-                spark, t.spec, window, saltBuckets,
-                dedup = t.spec.config.casColumns.nonEmpty,
-                observedFields = Some(t.stage.observedFields().toSeq))
-              var lostRace = false
-              try {
-                val (gated, casCleanup) = ApplyPlanner.casGate(
-                  t.table, planned.batch, planned.pkCols, t.spec.config.casColumns)
-                t.table.merge(
-                  gated,
-                  planned.pkCols,
-                  idempotenceKey = s"fence-${target.format}",
-                  resolved = target,
-                  lineage = Seq(s"batch=$batchId", s"topic=$topic"),
-                  extraMetrics = Map("merged_through_seq" -> seqNow)
-                )
-                casCleanup()
-              } catch {
-                // same optimistic-concurrency loser path as ReplayLoop's
-                // mergeToFence: a competing applier retired this topic's
-                // staged files mid-read AND its commit covers our target —
-                // the commit log would have no-op'd us anyway. Only the
-                // merge read/apply phase is guarded (see ReplayLoop): on
-                // the winning path the housekeeping below runs OUTSIDE the
-                // guard so its failures propagate instead of masquerading
-                // as this no-op; a lost race skips it (the winner owns that
-                // fence's retire/vacuum).
-                case e: Throwable
-                    if ReplayLoop.isMissingFileRead(e) && {
-                      val now = t.table.log
-                        .latest()
-                        .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-                        .getOrElse(Hlc.Zero)
-                      now >= target
-                    } =>
-                  lostRace = true
-                  println(
-                    s"[graft][fan] topic=$topic fence ${target.format} " +
-                      "already applied by a concurrent writer; no-op"
-                  )
-              }
-              if (!lostRace) {
-                // changelog BEFORE vacuum: segments diff against the
-                // previous version's manifest, which vacuum may retire
-                changelogDir.foreach(d => t.table.emitChangelog(s"$d/$topic"))
-                t.stage.retire(target)
-                // bound version growth exactly as ReplayLoop does: at
-                // streaming cadence every fence commits a new version per
-                // table, so the fan path needs the same vacuum or storage
-                // (and the gcHorizon back-walk) grows without bound
-                vacuumKeepVersions.foreach(t.table.vacuum(_))
-              }
-            }
-          }
-        }
-        // barrier between levels: children must see committed parents
-        merges.foreach(f => Await.result(f, Duration.Inf))
-      }
+    b.resolved.foreach { target =>
+      inFkOrder(topic => applier(topic).applyFence(target, batchId, Seq(s"batch=$batchId", s"topic=$topic")))
+    }
+  }
+
+  /** Run `apply` for every topic, parents before children, level by level;
+    * tables WITHIN a level are independent, so they apply concurrently
+    * (each is its own Spark job chain — the scheduler interleaves them,
+    * which keeps the cluster busy when a level has many small tables, the
+    * reference's fan-shards analog, fan_workers.go:136-194).
+    */
+  private def inFkOrder(apply: String => Unit): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    levelOrder.foreach { level =>
+      val applies = level.map(topic => Future(apply(topic)))
+      // barrier between levels: children must see committed parents
+      applies.foreach(f => Await.result(f, Duration.Inf))
     }
   }
 
   /** Immediate (fan) application of one micro-batch: per-topic slices are
-    * planned and merged directly, parents-before-children, with NO staging
-    * and NO fence gate. Idempotence key = the file-set key (scoped per
-    * table by its own commit log), so a redelivered batch no-ops per table
-    * exactly as in ReplayLoop's immediate mode. Topics within a level
-    * merge concurrently. Per-topic slicing is re-scan below
-    * [[immediateSplitThreshold]] targets and a one-pass partitioned split
-    * at or above it (see the knob's doc).
+    * applied directly, parents-before-children, with NO staging and NO
+    * fence gate (see [[Applier.applyImmediate]]). Per-topic slicing is
+    * re-scan below [[immediateSplitThreshold]] targets and a one-pass
+    * partitioned split at or above it (see the knob's doc).
     */
-  private def applyImmediate(
-      muts: DataFrame,
-      stageKey: Long,
-      batchId: Long,
-      newResolved: Option[Hlc]
-  ): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+  private def applyImmediate(b: BatchPrelude, batchId: Long): Unit = {
     val sliceCols = Seq("key", "data", "nanos", "logical", "src_file")
     val splitDir: Option[String] =
       if (targets.size < immediateSplitThreshold) None
       else {
-        val dir = s"$checkpointDir/imm-split-$stageKey"
+        val dir = s"$checkpointDir/imm-split-${b.stageKey}"
         // ONE job parses the whole batch and writes per-topic partitions
         // (idempotent: overwrite — a redelivered batch rewrites the same
         // scratch); every subsequent per-topic read prunes to its own
         // partition instead of re-parsing the batch
-        muts
+        b.mutations
           .select((Seq("topic") ++ sliceCols).map(col): _*)
           .write
           .mode("overwrite")
@@ -306,52 +184,19 @@ final class MultiTableLoop(
       }
     def slice(topic: String): DataFrame = splitDir match {
       case None =>
-        muts.filter(col("topic") === topic).select(sliceCols.map(col): _*)
+        b.mutations.filter(col("topic") === topic).select(sliceCols.map(col): _*)
       case Some(dir) =>
         // explicit schema: an all-marker batch writes no partitions, and
         // schemaless parquet reads of an empty scratch cannot infer
         spark.read
-          .schema(
-            org.apache.spark.sql.types.StructType(
-              Seq(
-                org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("data", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("nanos", org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("logical", org.apache.spark.sql.types.IntegerType),
-                org.apache.spark.sql.types.StructField("src_file", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("topic", org.apache.spark.sql.types.StringType)
-              )
-            )
-          )
+          .schema("key STRING, data STRING, nanos BIGINT, logical INT, src_file STRING, topic STRING")
           .parquet(dir)
           .filter(col("topic") === topic)
           .select(sliceCols.map(col): _*)
     }
-    levelOrder.foreach { level =>
-      val merges = level.map { topic =>
-        Future {
-          val t = targets(topic)
-          val planned = ApplyPlanner.plan(
-            spark, t.spec, slice(topic), saltBuckets,
-            dedup = t.spec.config.casColumns.nonEmpty)
-          val (gated, casCleanup) = ApplyPlanner.casGate(
-            t.table, planned.batch, planned.pkCols, t.spec.config.casColumns)
-          t.table.merge(
-            gated,
-            planned.pkCols,
-            idempotenceKey = s"batch-$stageKey",
-            // no fence gating, but resolved markers are still RECORDED on
-            // the commits they ride with (resolver.go:291-309)
-            resolved = newResolved.getOrElse(Hlc.Zero),
-            lineage = Seq(s"batch=$batchId", s"topic=$topic", "mode=immediate")
-          )
-          casCleanup()
-          changelogDir.foreach(d => t.table.emitChangelog(s"$d/$topic"))
-          vacuumKeepVersions.foreach(t.table.vacuum(_))
-        }
-      }
-      // barrier between levels: children must see committed parents
-      merges.foreach(f => Await.result(f, Duration.Inf))
+    inFkOrder { topic =>
+      applier(topic).applyImmediate(slice(topic), b, batchId,
+        Seq(s"batch=$batchId", s"topic=$topic", "mode=immediate"))
     }
     // reclaim the split scratch once every topic has merged
     splitDir.foreach(d => graft.util.Dirs.deleteRecursively(java.nio.file.Paths.get(d)))

@@ -33,13 +33,15 @@ import graft.table.SnapshotTable
   *      with idempotence key = the fence — replays of the same window
   *      no-op;
   *   5. retire staging partitions below the fence (metadata-only drop).
+  * Steps 4-5 are the [[Applier]] that [[MultiTableLoop]] runs per table.
   *
   * Immediate mode (`--immediate` in the reference,
   * internal/source/logical/config.go:73-75) skips staging and fencing and
-  * merges each micro-batch directly with idempotence key = batch id.
+  * merges each micro-batch directly with idempotence key = the batch's
+  * file-set key.
   *
   * Exactly-once: Spark's checkpoint makes file delivery at-least-once per
-  * batch id; the staging append markers, the read-side dedup, and the
+  * batch id; the staging append markers, the merge's per-key max_by, and the
   * commit-log idempotence keys make every step replay-safe; and because the
   * table itself is an LWW register per key (max-HLC row wins, deletes are
   * tombstones), replay from ANY checkpoint converges to the same final
@@ -179,104 +181,36 @@ final class ReplayLoop(
     }
   }
 
-  def committedFence: Hlc =
-    table.log.latest().map(m => Hlc(m.resolvedNanos, m.resolvedLogical)).getOrElse(Hlc.Zero)
+  def committedFence: Hlc = ReplayLoop.fenceOf(table)
 
-  @inline private def timed[T](what: String, batchId: Long)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    // driver-side phase metric (a few lines per micro-batch); stdout so it
-    // survives setLogLevel(WARN) — the lightweight analog of the
-    // reference's stage/apply Prometheus timers (apply/metrics.go:27-48)
-    println(s"[graft-loop] batch=$batchId $what ${(System.nanoTime() - t0) / 1000000} ms")
-    r
-  }
+  private def applier: Applier =
+    new Applier(spark, TableTarget(currentSpec, table, stage), saltBuckets,
+      changelogDir, vacuumKeepVersions)
 
   /** Process one micro-batch of raw ndjson lines. Public for batch-mode
     * replay and tests; the streaming query calls this via foreachBatch.
     */
   def processBatch(linesRaw: DataFrame, batchId: Long): Unit = {
-    // NOT cached: the batch feeds three passes (staging append, resolved
-    // scan, lineage), but re-scanning raw text from the page cache with the
-    // single-from_json parse is measurably cheaper than building a
-    // multi-GB columnar cache of the lines (which also made 32 concurrent
-    // cache-builder tasks the peak-heap hotspot). input_file_name() is
-    // captured per-scan, so every pass sees the same file column.
-    processBatchCached(
-      linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE)),
-      batchId
-    )
-  }
-
-  private def processBatchCached(lines: DataFrame, batchId: Long): Unit = {
-    val parsed = parse(lines)
-    val muts = parsed
-      .filter(!col(Changefeed.RESOLVED))
-      .select("key", "data", "nanos", "logical", "src_file")
-
-    // Identify this batch by its SOURCE FILE SET, not the engine's batch
-    // id: after a wiped checkpoint the file source renumbers batches from
-    // 0, and an id-keyed marker would wrongly skip a brand-new batch that
-    // happens to reuse an old id. The file-set hash is stable under
-    // renumbering AND still dedups true redeliveries of the same files.
-    val files = ReplayLoop.distinctFiles(lines)
-    // fall back to the engine batch id when the batch has no file
-    // provenance (in-memory DataFrames via the public processBatch):
-    // hashing an empty file set would collapse EVERY such batch onto one
-    // constant key and silently skip all but the first
-    val stageKey: Long =
-      if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
-    val lineage = s"batch=$batchId" +: files
-
-    // cheap second scan: only lines containing a resolved marker are parsed
-    // (every supported envelope spells its marker with a "resolved" key)
-    val resolvedRows = parse(
-      lines.filter(col("value").contains("\"resolved\""))
-    )
-      .filter(col(Changefeed.RESOLVED))
-      .agg(max(struct(col("nanos"), col("logical"))).as("m"))
-      .collect()
-    val newResolved: Option[Hlc] =
-      if (resolvedRows.isEmpty || resolvedRows(0).isNullAt(0)) None
-      else {
-        val r = resolvedRows(0).getStruct(0)
-        Some(Hlc(r.getLong(0), r.getInt(1)))
-      }
+    val b = BatchPrelude(linesRaw, batchId, parse)
+    val muts = b.mutations.select("key", "data", "nanos", "logical", "src_file")
+    val lineage = s"batch=$batchId" +: b.files
 
     if (immediate) {
-      val spec = currentSpec
-      val planned = ApplyPlanner.plan(
-        spark, spec, muts, saltBuckets,
-        dedup = spec.config.casColumns.nonEmpty)
-      val (gated, casCleanup) =
-        ApplyPlanner.casGate(table, planned.batch, planned.pkCols, spec.config.casColumns)
-      table.merge(
-        batch = gated,
-        pkCols = planned.pkCols,
-        // file-set key, not batch id: survives checkpoint-wipe renumbering
-        idempotenceKey = s"batch-$stageKey",
-        // immediate mode has no fence gating, but resolved markers are
-        // still RECORDED on the commit they ride with — the ledger shows
-        // source progress, mirroring the reference's Record-without-fencing
-        // (internal/source/cdc/resolver.go:291-309)
-        resolved = newResolved.getOrElse(Hlc.Zero),
-        lineage = lineage
-      )
-      casCleanup()
+      applier.applyImmediate(muts, b, batchId, lineage)
       return
     }
 
     val specForStage = currentSpec
     val pkSrc = specForStage.pkCols
       .map(c => specForStage.config.sourceNames.getOrElse(c, c))
-    timed("stage-append", batchId) {
+    ReplayLoop.timed("stage-append", batchId) {
       // drift summary (arity / field set / PK presence) rides this write;
       // violations fail the batch here, fields land in the field-set file.
       // A PK-less spec synthesizes its rowid at plan time, so key-arity /
       // PK-presence validation does not apply while staging.
       stage.append(
         muts,
-        stageKey,
+        b.stageKey,
         validatePk =
           if (specForStage.pkCols.isEmpty) None
           else Some((specForStage.pkCols.size, pkSrc))
@@ -286,16 +220,15 @@ final class ReplayLoop(
     // advance the filename-marker gate: everything in this batch was
     // delivered, so the delivered-data high-water moves to the newest
     // mtime among this batch's files
-    if (resolvedFromFilenames && files.nonEmpty) {
+    if (resolvedFromFilenames && b.files.nonEmpty) {
       advanceDeliveredHw(
-        files.flatMap(f => ReplayLoop.fileMtimeMillis(f).map(f -> _))
+        b.files.flatMap(f => ReplayLoop.fileMtimeMillis(f).map(f -> _))
       )
     }
     val markerFence: Option[Hlc] =
       if (!resolvedFromFilenames) None else safeMarkerFence()
 
-    val fence = committedFence
-    (newResolved.toSeq ++ markerFence).maxOption.filter(_ > fence).foreach { target =>
+    (b.resolved.toSeq ++ markerFence).maxOption.foreach { target =>
       mergeToFence(target, batchId, lineage)
     }
   }
@@ -335,95 +268,16 @@ final class ReplayLoop(
       .maxOption
   }
 
-  /** Merge the staged window up to `target` and commit the fence — the
-    * shared tail of a resolved event, whether it arrived in-stream, as a
-    * `.RESOLVED` marker file, or from the post-catch-up drain.
+  /** Merge the staged window up to `target` and commit the fence, whether
+    * the resolved event arrived in-stream, as a `.RESOLVED` marker file, or
+    * from the post-catch-up drain. The marker gate's high-water rides the
+    * commit so a restart without the checkpoint file can recover it.
     */
-  private def mergeToFence(target: Hlc, batchId: Long, lineage: Seq[String]): Unit = {
-    val fence = committedFence
-    // window = (prevFence, target] PLUS anything staged since the last
-    // merge regardless of ts: a mutation below an already-committed fence
-    // can still arrive late when the transport reorders deliveries (e.g.
-    // the file source orders by mtime) — it was staged AFTER the last
-    // merge, so the stage_seq branch picks it up exactly once. Rows
-    // already merged by earlier fences (ts <= fence, staged before the
-    // recorded seq) are no longer re-read and re-written every fence.
-    //
-    // raw (non-deduplicated) read: exact duplicates collapse in the
-    // merge's per-key max_by anyway, saving a shuffle. Not cached: with
-    // the staging-time summary, the window feeds exactly one consumer
-    // (the merge, which caches its own transformed batch).
-    val mergedThroughSeq: Long = table.log
-      .latest()
-      .flatMap(_.metric("merged_through_seq"))
-      .getOrElse(0L)
-    val seqNow = stage.currentSeq() // this batch's append already happened
-    val window =
-      stage.selectWindowRaw(fence, target, stagedAfterSeq = Some(mergedThroughSeq))
-    val spec = currentSpec
-    // pre-dedup only when a CAS gate needs one candidate per key; the
-    // merge's per-key max_by reduction is the LWW otherwise (saves two
-    // shuffles of the window)
-    val planned = timed("plan", batchId) {
-      ApplyPlanner.plan(
-        spark, spec, window, saltBuckets,
-        dedup = spec.config.casColumns.nonEmpty,
-        // field set was collected while staging: no summary scan here
-        observedFields = Some(stage.observedFields().toSeq))
-    }
-    var lostRace = false
-    try {
-      val (gated, casCleanup) =
-        ApplyPlanner.casGate(table, planned.batch, planned.pkCols, spec.config.casColumns)
-      timed(s"merge fence=${target.format}", batchId) {
-        table.merge(
-          batch = gated,
-          pkCols = planned.pkCols,
-          idempotenceKey = s"fence-${target.format}",
-          resolved = target,
-          lineage = lineage,
-          extraMetrics =
-            Map("merged_through_seq" -> seqNow) ++
-              (if (resolvedFromFilenames) Map("delivered_mtime_hw" -> deliveredMtimeHw)
-               else Map.empty)
-        )
-      }
-      casCleanup()
-    } catch {
-      // Optimistic-concurrency loser whose CONFLICT surfaced as a failed
-      // READ rather than a commit-log no-op: a competing applier (HA
-      // restart overlap — two drivers on one table) merged this window and
-      // RETIRED its staged files while our lazy scan was mid-flight. The
-      // competitor's commit proves every retired row was applied, so if
-      // the committed fence now covers our target this attempt is the
-      // same no-op the commit log would have made it — swallow and let the
-      // next batch proceed against the new head. Any read failure NOT
-      // explained by a covering commit is real data loss and re-raises.
-      //
-      // The catch wraps ONLY the merge read/apply phase: the housekeeping
-      // below used to sit inside it, so an emitChangelog/retire failure
-      // whose message happened to match the missing-file signature was
-      // silently swallowed as "already applied" — permanently skipping
-      // retire and vacuum (unbounded staging growth) with a misleading
-      // log line. On the winning path housekeeping now runs OUTSIDE the
-      // guard (its failures propagate); a lost race still skips it, as
-      // before — the winner owns that fence's retire/vacuum, and a loser
-      // retiring concurrently races the winner's staging bookkeeping.
-      case e: Throwable if ReplayLoop.isMissingFileRead(e) && committedFence >= target =>
-        lostRace = true
-        println(
-          s"[graft][replay] fence ${target.format} already applied by a " +
-            "concurrent writer (staged files retired mid-read); no-op"
-        )
-    }
-    if (!lostRace) {
-      // changelog BEFORE vacuum: the new segment diffs against the previous
-      // version's manifest, which vacuum may retire
-      changelogDir.foreach(table.emitChangelog)
-      stage.retire(target)
-      vacuumKeepVersions.foreach(table.vacuum(_))
-    }
-  }
+  private def mergeToFence(target: Hlc, batchId: Long, lineage: Seq[String]): Unit =
+    applier.applyFence(
+      target, batchId, lineage,
+      if (resolvedFromFilenames) Map("delivered_mtime_hw" -> deliveredMtimeHw) else Map.empty
+    )
 
   /** Every regular file in the feed tree (depth 2 — top level plus chunk
     * subdirectories): (path, mtime millis, isMarker, parsed marker HLC).
@@ -464,7 +318,7 @@ final class ReplayLoop(
     * not have been delivered) still blocks markers newer than it.
     */
   def drainResolvedFilenameMarkers(): Unit = if (resolvedFromFilenames) {
-    safeMarkerFence().filter(_ > committedFence).foreach { target =>
+    safeMarkerFence().foreach { target =>
       mergeToFence(target, batchId = -1L, Seq("drain=resolved-markers"))
     }
   }
@@ -527,7 +381,6 @@ final class ReplayLoop(
       nowNanos: Long = System.currentTimeMillis() * 1000000L,
       trigger: Trigger = Trigger.ProcessingTime("1 second")
   ): (StreamingQuery, Boolean) = {
-    val fence = committedFence
     val stale = isLagging(backfillWindowNanos, nowNanos)
     if (stale) runAvailableNow()
     (start(trigger), stale)
@@ -679,40 +532,69 @@ final class ReplayLoop(
 
 object ReplayLoop {
 
-  /** True when the failure chain bottoms out in a missing input file —
-    * the signature of a concurrent applier retiring staged partitions
-    * mid-scan (Spark 4 wraps it as `FAILED_READ_FILE.FILE_NOT_EXIST`;
-    * older paths surface a raw `FileNotFoundException`).
-    */
-  def isMissingFileRead(e: Throwable): Boolean = {
-    var cur = e
-    var depth = 0
-    while (cur != null && depth < 16) {
-      cur match {
-        case _: java.io.FileNotFoundException => return true
-        case st: org.apache.spark.SparkThrowable
-            if st.getCondition != null &&
-              (st.getCondition == "FAILED_READ_FILE.FILE_NOT_EXIST" ||
-                st.getCondition == "PATH_NOT_FOUND") =>
-          return true
-        case _ =>
-          // specific error-CLASS tokens in the message (wrappers that carry
-          // the class marker without implementing SparkThrowable) — but no
-          // longer the former free-text `contains("does not exist")`, which
-          // also matched analyzer errors ("Table or view does not exist",
-          // unresolved columns) and silently swallowed genuine planner bugs
-          // as concurrency no-ops
-          val m = cur.getMessage
-          if (m != null &&
-            (m.contains("FAILED_READ_FILE.FILE_NOT_EXIST") ||
-              m.contains("PATH_NOT_FOUND")))
-            return true
-      }
-      cur = cur.getCause
-      depth += 1
-    }
-    false
+  /** The resolved fence `table`'s latest commit carried it to. */
+  def fenceOf(table: SnapshotTable): Hlc =
+    table.log.latest().map(_.resolved).getOrElse(Hlc.Zero)
+
+  /** Run `f` as phase `what` of batch `batchId` and print its wall time. */
+  private[loop] def timed[T](what: String, batchId: Long)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    // driver-side phase metric (a few lines per micro-batch); stdout so it
+    // survives setLogLevel(WARN) — the lightweight analog of the
+    // reference's stage/apply Prometheus timers (apply/metrics.go:27-48)
+    println(s"[graft-loop] batch=$batchId $what ${(System.nanoTime() - t0) / 1000000} ms")
+    r
   }
+
+  /** True when the failure chain bottoms out in a missing or unreadable
+    * input file — the signature of a concurrent applier retiring staged
+    * partitions mid-scan (Spark 4 wraps it as a `FAILED_READ_FILE.*`
+    * condition, e.g. `FILE_NOT_EXIST`; older paths surface a raw
+    * `FileNotFoundException`).
+    */
+  def isMissingFileRead(e: Throwable): Boolean =
+    causes(e).exists {
+      case _: java.io.FileNotFoundException => true
+      case c =>
+        // besides the typed condition, the error-CLASS token in the message
+        // (wrappers that carry the class marker without implementing
+        // SparkThrowable) — never free text like "does not exist", which
+        // also matches analyzer errors ("Table or view does not exist") and
+        // would swallow genuine planner bugs as concurrency no-ops
+        (conditionOf(c).toSeq ++ Option(c.getMessage)).exists(m =>
+          m.contains("FAILED_READ_FILE.") || m.contains("PATH_NOT_FOUND"))
+    }
+
+  private def conditionOf(t: Throwable): Option[String] = t match {
+    case st: org.apache.spark.SparkThrowable => Option(st.getCondition)
+    case _ => None
+  }
+
+  /** The cause chain of `e`, cut at 16 links (cycle-safe). */
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
+
+  /** Whether a failed fence apply lost a race: a competing applier (HA
+    * restart overlap — two drivers on one table) merged the window and
+    * retired its staged files while this attempt's lazy scan was
+    * mid-flight. Only a missing-file read while the committed fence
+    * (`covered`) reaches the target qualifies: the competitor's commit
+    * proves every retired row was applied, so the attempt is the no-op the
+    * commit log would have made it. A covered fence with any other failure
+    * is a signature this check does not know: its class and condition are
+    * logged before the caller re-raises it.
+    */
+  private[graft] def lostRace(e: Throwable, covered: Boolean): Boolean =
+    covered && (isMissingFileRead(e) || {
+      val condition = causes(e).flatMap(conditionOf).headOption
+      println(
+        s"[graft] fence committed by a concurrent writer, but the failure is not a " +
+          s"missing-file read: ${e.getClass.getName} " +
+          s"(condition ${condition.getOrElse("none")}); re-raising"
+      )
+      false
+    })
 
   /** Distinct source files of a batch — cheap: file-name column only.
     * Feeds both the lineage record and the batch identity key; shared by
@@ -790,5 +672,170 @@ object ReplayLoop {
         val mean = math.max(1L, sizes.sum / sizes.size)
         math.max(1, math.min(maxFilesPerTrigger.toLong, budget / mean).toInt)
       }
+  }
+}
+
+/** What both loops learn about a micro-batch before staging it: its parsed
+  * mutations, its source-file set, its identity key and its newest
+  * in-stream resolved marker.
+  *
+  * The lines are NOT cached: they feed three passes (staging append,
+  * resolved scan, file set), but re-scanning raw text from the page cache
+  * with the single-from_json parse is measurably cheaper than building a
+  * multi-GB columnar cache of the lines (which also made concurrent
+  * cache-builder tasks the peak-heap hotspot). input_file_name() is
+  * captured per scan, so every pass sees the same file column.
+  */
+private[loop] final case class BatchPrelude(
+    mutations: DataFrame,
+    files: Seq[String],
+    stageKey: Long,
+    resolved: Option[Hlc]
+)
+
+private[loop] object BatchPrelude {
+  def apply(linesRaw: DataFrame, batchId: Long, parse: DataFrame => DataFrame): BatchPrelude = {
+    val lines = linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE))
+    // Identify the batch by its SOURCE FILE SET, not the engine's batch id:
+    // after a wiped checkpoint the file source renumbers batches from 0,
+    // and an id-keyed marker would wrongly skip a brand-new batch that
+    // happens to reuse an old id. The file-set hash is stable under
+    // renumbering AND still dedups true redeliveries of the same files.
+    val files = ReplayLoop.distinctFiles(lines)
+    // fall back to the engine batch id when the batch has no file
+    // provenance (in-memory DataFrames via the public processBatch):
+    // hashing an empty file set would collapse EVERY such batch onto one
+    // constant key and silently skip all but the first
+    val stageKey = if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
+    // cheap second scan: only lines containing a resolved marker are parsed
+    // (every supported envelope spells its marker with a "resolved" key)
+    val newest = parse(lines.filter(col("value").contains("\"resolved\"")))
+      .filter(col(Changefeed.RESOLVED))
+      .agg(max(struct(col("nanos"), col("logical"))))
+      .collect()
+      .headOption
+      .filterNot(_.isNullAt(0))
+      .map(_.getStruct(0))
+    BatchPrelude(
+      parse(lines).filter(!col(Changefeed.RESOLVED)),
+      files,
+      stageKey,
+      newest.map(r => Hlc(r.getLong(0), r.getInt(1)))
+    )
+  }
+}
+
+/** One table's apply step, shared by both loops — the analog of the
+  * reference's per-table Applier, which serial and fan events use alike
+  * (internal/target/apply/apply.go:148-191): the table's apply config
+  * (CAS, deadlines, expressions) applies identically on every path.
+  */
+private[loop] final class Applier(
+    spark: SparkSession,
+    t: TableTarget,
+    saltBuckets: Int,
+    changelogDir: Option[String],
+    vacuumKeepVersions: Option[Int]
+) {
+
+  /** Merge the staged window up to `target` and commit the fence, then
+    * publish the changelog, retire staging below the fence and vacuum.
+    * A no-op unless `target` is past the committed fence.
+    *
+    * The window is `(committed fence, target]` PLUS anything staged since
+    * the last merge regardless of ts: a mutation below an already-committed
+    * fence can still arrive late when the transport reorders deliveries
+    * (the file source orders by mtime) — it was staged AFTER the last
+    * merge, so the stage-seq branch picks it up exactly once, while rows
+    * merged by earlier fences are not re-read every fence. The read is raw
+    * (not deduplicated): exact duplicates collapse in the merge's per-key
+    * max_by anyway. Not cached: the window feeds exactly one consumer, the
+    * merge, and the field set was recorded while staging, so planning
+    * runs no summary scan.
+    */
+  def applyFence(
+      target: Hlc,
+      batchId: Long,
+      lineage: Seq[String],
+      extraMetrics: Map[String, Long] = Map.empty
+  ): Unit = {
+    val fence = ReplayLoop.fenceOf(t.table)
+    if (target > fence) {
+      val mergedThroughSeq =
+        t.table.log.latest().flatMap(_.metric("merged_through_seq")).getOrElse(0L)
+      val seqNow = t.stage.currentSeq() // this batch's append already happened
+      val window = t.stage.selectWindowRaw(fence, target, stagedAfterSeq = Some(mergedThroughSeq))
+      val applied =
+        try {
+          planMerge(
+            window, Some(t.stage.observedFields().toSeq), batchId, s"merge fence=${target.format}",
+            s"fence-${target.format}", target, lineage,
+            Map("merged_through_seq" -> seqNow) ++ extraMetrics)
+          true
+        } catch {
+          // only the plan/merge phase is guarded: housekeeping failures
+          // below must propagate, never masquerade as this no-op. A lost
+          // race skips housekeeping — the winner owns that fence's retire
+          // and vacuum, and a loser retiring concurrently races the
+          // winner's staging bookkeeping.
+          case e: Throwable if ReplayLoop.lostRace(e, ReplayLoop.fenceOf(t.table) >= target) =>
+            println(
+              s"[graft] ${t.table.root}: fence ${target.format} already applied by a " +
+                "concurrent writer (staged files retired mid-read); no-op"
+            )
+            false
+        }
+      if (applied) {
+        // changelog BEFORE vacuum: the new segment diffs against the
+        // previous version's manifest, which vacuum may retire
+        changelogDir.foreach(t.table.emitChangelog)
+        t.stage.retire(target)
+        vacuumKeepVersions.foreach(t.table.vacuum(_))
+      }
+    }
+  }
+
+  /** Immediate mode (`--immediate` in the reference,
+    * internal/source/logical/config.go:73-75): merge `rows` directly, with
+    * no staging and no fence gate, then publish the changelog and vacuum.
+    * Idempotence key = the batch's file-set key, which survives
+    * checkpoint-wipe renumbering. Resolved markers are still RECORDED on
+    * the commit they ride with, so the ledger shows source progress
+    * (internal/source/cdc/resolver.go:291-309).
+    */
+  def applyImmediate(rows: DataFrame, b: BatchPrelude, batchId: Long, lineage: Seq[String]): Unit = {
+    planMerge(rows, None, batchId, "merge", s"batch-${b.stageKey}",
+      b.resolved.getOrElse(Hlc.Zero), lineage, Map.empty)
+    changelogDir.foreach(t.table.emitChangelog)
+    vacuumKeepVersions.foreach(t.table.vacuum(_))
+  }
+
+  /** plan → CAS gate → merge → release the gate's cache, timed as the
+    * `plan` and `mergePhase` phases of `batchId`.
+    */
+  private def planMerge(
+      rows: DataFrame,
+      observedFields: Option[Seq[String]],
+      batchId: Long,
+      mergePhase: String,
+      idempotenceKey: String,
+      resolved: Hlc,
+      lineage: Seq[String],
+      extraMetrics: Map[String, Long]
+  ): Unit = {
+    val spec = t.spec
+    // pre-dedup only when a CAS gate needs one candidate per key; the
+    // merge's per-key max_by reduction is the LWW otherwise (saves two
+    // shuffles)
+    val planned = ReplayLoop.timed("plan", batchId) {
+      ApplyPlanner.plan(spark, spec, rows, saltBuckets,
+        dedup = spec.config.casColumns.nonEmpty, observedFields = observedFields)
+    }
+    val (gated, casCleanup) =
+      ApplyPlanner.casGate(t.table, planned.batch, planned.pkCols, spec.config.casColumns)
+    ReplayLoop.timed(mergePhase, batchId) {
+      t.table.merge(gated, planned.pkCols, idempotenceKey, resolved, lineage, extraMetrics)
+    }
+    casCleanup()
   }
 }

@@ -1,10 +1,12 @@
 package graft.stage
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.applyops.DriftSummary
 import graft.model.Hlc
+import graft.util.Dirs.{deleteRecursively, listDir}
 
 /** Durable staging buffer for mutations awaiting their resolved fence.
   *
@@ -18,26 +20,16 @@ import graft.model.Hlc
   *     (the analog of the windowed DELETE loop, stage.go:390-436).
   *
   * Idempotence: appends may be replayed (micro-batch retry) and the feed
-  * itself may deliver duplicates (types.go:150-151); readers deduplicate on
-  * `(nanos, logical, key)` — duplicate deliveries are byte-identical by
-  * protocol, so any survivor is correct.
+  * itself may deliver duplicates (types.go:150-151); duplicate deliveries
+  * are byte-identical by protocol, so any survivor is correct — the merge's
+  * per-key max_by keeps one, and [[readAll]] deduplicates on
+  * `(nanos, logical, key)`.
   */
 final class StagedStore(
     spark: SparkSession,
     val root: String,
     /** HLC nanos per staging partition bucket */
-    val bucketNanos: Long = 3600L * 1000000000L,
-    /** When true, [[append]] repartitions by `(ts_bucket, 4-way key salt)`
-      * before writing — few large files per bucket, at the cost of
-      * shuffling the FULL batch volume once per micro-batch. Default
-      * false: staging is a transient pass-through buffer, and paying a
-      * whole-feed shuffle purely for file-count control is the wrong
-      * trade at 100 TB — per-batch file count is already bounded by
-      * (input splits x ts-buckets-per-batch), readers scan staging with
-      * split-sized tasks regardless of file layout, and retirement drops
-      * whole partition directories either way.
-      */
-    val coalesceAppend: Boolean = false
+    val bucketNanos: Long = 3600L * 1000000000L
 ) {
   import StagedStore._
 
@@ -50,63 +42,7 @@ final class StagedStore(
 
   private def bucketOf(nanos: Long): Long = Math.floorDiv(nanos, bucketNanos)
 
-  /** Write `staged` into a private scratch tree, then ADOPT the part files
-    * into the shared partition layout with driver-side renames (the same
-    * pattern [[StagedStore.appendMultiTopic]] always used).
-    *
-    * Two concurrent appenders writing `mode("append")` into one directory
-    * share the Hadoop committer's `_temporary` tree: the first job's
-    * cleanup deletes the second's in-flight task files, failing it with
-    * TASK_WRITE_FAILED — the write-side face of an HA restart overlap
-    * (two drivers on one staging store). A per-append scratch dir gives
-    * every job a private committer tree; adoption is per-file rename
-    * (part names carry the job UUID, so two appenders can adopt into one
-    * bucket dir without name collisions). A concurrent retire may drop
-    * the target dir between create and move — retried, recreating the
-    * dir; the row is then re-merged from this fresh file or already
-    * covered by the competitor's fence.
-    */
-  private def writeAdopt(staged: DataFrame): Unit = {
-    // reclaim orphans of killed writers (a scratch tree is live for the
-    // duration of one append job; 30 min is far past any batch)
-    graft.util.Dirs.listDir(Paths.get(root)).foreach { p =>
-      if (p.getFileName.toString.startsWith("_scratch-") &&
-        Files.getLastModifiedTime(p).toMillis < System.currentTimeMillis() - 30 * 60 * 1000L)
-        rmTree(p)
-    }
-    val scratch = Files.createTempDirectory(Paths.get(root), "_scratch-")
-    try {
-      val out = scratch.resolve("out").toString
-      staged.write.mode("overwrite").partitionBy(TS_BUCKET).parquet(out)
-      graft.util.Dirs.listDir(Paths.get(out)).foreach { bucketDir =>
-        val name = bucketDir.getFileName.toString
-        if (name.startsWith(s"$TS_BUCKET=")) {
-          val target = Paths.get(dataDir, name)
-          graft.util.Dirs.listDir(bucketDir).foreach { f =>
-            if (f.getFileName.toString.endsWith(".parquet")) {
-              var tries = 0
-              var done = false
-              while (!done) {
-                try {
-                  Files.createDirectories(target)
-                  Files.move(f, target.resolve(f.getFileName))
-                  done = true
-                } catch {
-                  case _: java.nio.file.NoSuchFileException if tries < 3 =>
-                    tries += 1
-                }
-              }
-            }
-          }
-        }
-      }
-    } finally rmTree(scratch)
-  }
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) graft.util.Dirs.listDir(p).foreach(rmTree)
-    Files.deleteIfExists(p)
-  }
+  private def marker(batchId: Long) = markerDir.resolve(s"$batchId")
 
   /** Monotone append counter, persisted across restarts. Every successful
     * (non-replayed) [[append]] stamps its rows with the next value; the
@@ -118,113 +54,23 @@ final class StagedStore(
   def currentSeq(): Long =
     if (Files.exists(seqFile)) Files.readString(seqFile).trim.toLong else 0L
 
-  private def nextSeq(): Long = {
-    val n = currentSeq() + 1
-    Files.writeString(seqFile, n.toString)
-    n
-  }
-
   /** Append a batch of parsed mutations
-    * `(key, data, nanos, logical, src_file)`. `batchId` makes replays cheap
-    * no-ops (a marker is written after a successful append); a crash between
-    * append and marker re-appends, which the read-side dedup absorbs.
+    * `(key, data, nanos, logical, src_file)` — the one-table call of
+    * [[StagedStore.appendTopics]]. `batchId` makes replays cheap no-ops (a
+    * marker is written after a successful append); returns false for such
+    * a replay.
     *
-    * When `validatePk` is set, the drift summary — key arities, the distinct
-    * payload field set, PK-presence — rides the SAME scan that writes the
-    * staged files (Observation): no separate summary pass ever touches the
-    * data again. Violations (wrong key arity, missing PK) throw before the
-    * marker is written, so the batch fails exactly once and replays retry
-    * it; the field set is persisted in the marker for merge-time schema
-    * reconciliation (field sets only grow, so the union over markers is the
-    * window's field set).
+    * `validatePk = Some((arity, payloadPkNames))` checks key arity and PK
+    * presence; a PK-less spec (synthetic rowid) passes None and only has
+    * its field set recorded.
     */
   def append(
       mutations: DataFrame,
       batchId: Long,
       validatePk: Option[(Int, Seq[String])] = None
   ): Boolean = {
-    val marker = markerDir.resolve(s"$batchId")
-    if (Files.exists(marker)) return false
-    val seq = nextSeq()
-    val stamped = mutations
-      .withColumn(SEQ, lit(seq))
-      .withColumn(TS_BUCKET, floor(col("nanos") / bucketNanos))
-    // shuffle-free by default (see `coalesceAppend`): each input task
-    // writes its rows straight into the ts-bucket directories it touches
-    val staged =
-      if (coalesceAppend)
-        stamped.repartition(col(TS_BUCKET), pmod(xxhash64(col("key")), lit(4)))
-      else stamped
-
-    validatePk match {
-      case None =>
-        // no PK validation (e.g. a PK-less spec with a synthetic rowid),
-        // but the payload FIELD SET must still be collected — schema
-        // evolution at merge time reads it from observedFields()
-        val obs = org.apache.spark.sql.Observation(
-          s"stage-$batchId-${java.util.UUID.randomUUID()}"
-        )
-        writeAdopt(
-          staged.observe(
-            obs,
-            array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-              .as("fields")
-          )
-        )
-        obs.get.get("fields") match {
-          case Some(f: Seq[_]) => recordFields(f.map(_.toString))
-          case _ => ()
-        }
-        Files.writeString(marker, s"""{"seq":$seq}""")
-      case Some((pkArity, pkSrcNames)) =>
-        // a PK-less spec (synthetic rowid) never validates here, but guard
-        // the empty reduce anyway
-        val missingPkCond =
-          if (pkSrcNames.isEmpty) lit(false)
-          else
-            col("data").isNotNull &&
-              pkSrcNames
-                .map(n => get_json_object(col("data"), s"$$.$n").isNull)
-                .reduce(_ || _)
-        // globally-unique name: Observations match by name on the shared
-        // listener bus, so two sessions staging the same stageKey
-        // concurrently would otherwise read each other's drift metrics
-        val obs = org.apache.spark.sql.Observation(
-          s"stage-$batchId-${java.util.UUID.randomUUID()}"
-        )
-        writeAdopt(
-          staged.observe(
-            obs,
-            collect_set(size(from_json(col("key"), org.apache.spark.sql.types.ArrayType(StringType))))
-              .as("arities"),
-            array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-              .as("fields"),
-            max(when(missingPkCond, 1).otherwise(0)).as("missing_pk")
-          )
-        )
-        val m = obs.get
-        val arities = m("arities").asInstanceOf[Seq[Int]]
-        val fields = m("fields").asInstanceOf[Seq[String]]
-        val missingPk =
-          Option(m("missing_pk")).exists(_.asInstanceOf[Number].intValue() == 1)
-        arities.find(_ != pkArity).foreach { got =>
-          throw new graft.model.SchemaDriftException(
-            s"the mutation key has $got values, expected $pkArity"
-          )
-        }
-        if (missingPk) {
-          throw new graft.model.SchemaDriftException(
-            s"missing primary-key column in payload; expected all of " +
-              pkSrcNames.mkString("[", ", ", "]")
-          )
-        }
-        // fold the batch's payload field set into the ONE compacted
-        // `_fields` file BEFORE the marker lands: a crash in between
-        // replays the batch and re-unions (idempotent — sets only grow)
-        recordFields(fields)
-        Files.writeString(marker, s"""{"seq":$seq}""")
-    }
-    true
+    val one = DriftSummary.OneTable
+    stageTopics(mutations, lit(one), batchId, Map(one -> this), validatePk.map(one -> _).toMap)
   }
 
   /** Fold `fields` into the compacted field-set file (read-union-write,
@@ -251,8 +97,7 @@ final class StagedStore(
   private def legacyMarkerFields(): Set[String] = {
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    StagedStore
-      .listDir(markerDir)
+    listDir(markerDir)
       .flatMap { p =>
         val f = mapper.readTree(Files.readString(p)).get("fields")
         if (f == null) Nil else f.elements().asScala.map(_.asText()).toList
@@ -260,7 +105,7 @@ final class StagedStore(
       .toSet
   }
 
-  private[graft] def recordFields(fields: Seq[String]): Unit = {
+  private def recordFields(fields: Seq[String]): Unit = {
     val legacy =
       if (!Files.exists(fieldsFile)) legacyMarkerFields() else Set.empty[String]
     val merged = (readFieldsFile() ++ legacy ++ fields).toSeq.sorted
@@ -315,13 +160,14 @@ final class StagedStore(
   def readAll(): DataFrame =
     readRaw().dropDuplicates("nanos", "logical", "key")
 
-  /** [[selectWindow]] without the `(nanos, logical, key)` dedup shuffle:
-    * duplicate deliveries are byte-identical by protocol, and the snapshot
-    * merge's per-key max_by keeps exactly one of any exact-tie group — so
-    * the merge path can skip the dedup entirely. Use [[selectWindow]] when
-    * consumers need unique rows.
-    */
-  /** @param stagedAfterSeq when set, rows staged with `stage_seq >` this
+  /** Staged mutations with `from < ts <= to` (HLC order), NOT
+    * deduplicated: duplicate deliveries are byte-identical by protocol, and
+    * the snapshot merge's per-key max_by keeps exactly one of any exact-tie
+    * group, so the merge path needs no dedup shuffle. The `ts_bucket` range
+    * predicate prunes partitions; the `nanos` range is pushed to the
+    * parquet scan; the exact HLC tuple bounds are applied post-scan.
+    *
+    * @param stagedAfterSeq when set, rows staged with `stage_seq >` this
     *   value are included even when their ts is at/below `from` — the
     *   late-delivery branch: a transport-reordered mutation below the
     *   committed fence still applies exactly once (it was never merged),
@@ -352,33 +198,11 @@ final class StagedStore(
     readRaw().filter(cond && ts <= hi)
   }
 
-  /** Staged mutations with `from < ts <= to` (HLC order), deduplicated.
-    * The `ts_bucket` range predicate prunes partitions; the `nanos` range is
-    * pushed to the parquet scan; the exact HLC tuple bounds are applied
-    * post-scan.
-    */
-  def selectWindow(
-      from: Hlc,
-      to: Hlc,
-      stagedAfterSeq: Option[Long] = None
-  ): DataFrame =
-    // filter (selectWindowRaw) BEFORE the dedup aggregate so partition
-    // pruning and parquet predicate pushdown see the raw scan
-    selectWindowRaw(from, to, stagedAfterSeq)
-      .dropDuplicates("nanos", "logical", "key")
-
-  /** Distinct commit timestamps present in staging within the window —
-    * the reference's TransactionTimes scan (stage.go:126-164).
-    */
-  def transactionTimes(from: Hlc, to: Hlc): DataFrame =
-    selectWindow(from, to).select("nanos", "logical").distinct()
-
   /** Highest staging partition bucket currently on disk (directory listing
     * only — no data read). None when nothing is staged.
     */
   def maxStagedBucket(): Option[Long] = {
-    StagedStore
-      .listDir(Paths.get(dataDir))
+    listDir(Paths.get(dataDir))
       .map(_.getFileName.toString)
       .filter(_.startsWith(s"$TS_BUCKET="))
       .map(_.stripPrefix(s"$TS_BUCKET=").toLong)
@@ -403,7 +227,7 @@ final class StagedStore(
   def retire(upTo: Hlc, markerKeep: Int = 64): Int = {
     val fenceBucket = bucketOf(upTo.nanos) // drop buckets strictly below
     var dropped = 0
-    StagedStore.listDir(Paths.get(dataDir)).foreach { p =>
+    listDir(Paths.get(dataDir)).foreach { p =>
       val name = p.getFileName.toString
       if (name.startsWith(s"$TS_BUCKET=")) {
         val b = name.stripPrefix(s"$TS_BUCKET=").toLong
@@ -424,8 +248,7 @@ final class StagedStore(
         val n = mapper.readTree(Files.readString(p)).get("seq")
         if (n == null) Long.MinValue else n.asLong(Long.MinValue)
       } catch { case _: Exception => Long.MinValue }
-    val markers = StagedStore
-      .listDir(markerDir)
+    val markers = listDir(markerDir)
       .map(p =>
         (markerSeq(p), Files.getLastModifiedTime(p).toMillis, p.getFileName.toString, p)
       )
@@ -433,148 +256,154 @@ final class StagedStore(
     markers.dropRight(markerKeep).foreach { case (_, _, _, p) => Files.deleteIfExists(p) }
     dropped
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) StagedStore.listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }
 
 object StagedStore {
   val TS_BUCKET = "ts_bucket"
   val SEQ = "stage_seq"
 
-  /** Eager, stream-closing directory listing (shared impl: [[graft.util.Dirs]]). */
-  private[graft] def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    graft.util.Dirs.listDir(p)
+  /** Routing column of [[appendTopics]]' input. */
+  private val TOPIC = "topic"
 
-  /** ONE-PASS staging of a multi-topic batch.
+  /** Spill partition column naming a batch's target store by its index. */
+  private val STORE = "__store"
+
+  /** The ONE staging append, for one table or many: stage every pending
+    * store's slice of `mutations` `(topic, key, data, nanos, logical,
+    * src_file)` in a single Spark job with no shuffle, then validate,
+    * adopt and mark. In order:
+    *   1. write the batch into a private scratch dir under the first
+    *      store's root, partitioned by ts bucket (under a store-index
+    *      level when there are several stores);
+    *   2. the drift summary ([[graft.applyops.DriftSummary]]) rides that
+    *      same write as an Observation — no second pass over the data;
+    *   3. validate: a wrong key arity or missing PK throws, and the
+    *      scratch (the batch's ONLY copy) is dropped — a rejected batch
+    *      never reaches staging, so retries never pile up copies;
+    *   4. ADOPT each store's part files into its partition layout with
+    *      driver-side renames;
+    *   5. bump each store's seq, fold its field set into `_fields`, write
+    *      its batch marker.
     *
-    * The per-topic `append` loop scans the (cached) batch once per topic —
-    * T passes. This writes every topic's slice in a single Spark job
-    * (`partitionBy(topic, ts_bucket)` into a batch-scoped spill dir), runs
-    * ONE `groupBy(topic)` drift aggregation, then adopts the written files
-    * into each topic's store with driver-side renames (metadata only) and
-    * writes the per-topic markers. Crash between adopt and marker replays
-    * the batch; duplicate rows are byte-identical and collapse in the
-    * read-side dedup / merge max_by, same contract as [[StagedStore.append]].
+    * A private scratch tree per append is what makes concurrent appenders
+    * safe: two jobs writing `mode("append")` into one directory share the
+    * Hadoop committer's `_temporary` tree, and the first job's cleanup
+    * deletes the second's in-flight task files (TASK_WRITE_FAILED — the
+    * write-side face of an HA restart overlap, two drivers on one staging
+    * store). Part names carry the job UUID, so two appenders adopt into
+    * one bucket dir without collisions; a concurrent retire may drop the
+    * target dir between create and move — retried, recreating the dir
+    * (the row is then re-merged from this fresh file or already covered by
+    * the competitor's fence).
     *
-    * `mutations` must carry `(topic, key, data, nanos, logical, src_file)`.
-    * Per-topic seq values are stamped at write time (CASE over topics) and
-    * the stores' counters are bumped after adoption.
+    * Idempotence: stores already holding this `batchId`'s marker are
+    * skipped (their rows are filtered out). A crash between adopt and
+    * marker replays the batch; the duplicate rows are byte-identical and
+    * collapse in the merge's per-key max_by. Field sets only grow, so a
+    * replayed `_fields` fold is idempotent. The seq is bumped only after
+    * adoption, so a merge that reads the counter never covers rows not yet
+    * visible in staging.
+    *
+    * @param validatePk topic -> (key arity, payload PK names); topics
+    *   absent from it (PK-less specs synthesize a rowid at plan time) only
+    *   have their field sets recorded
+    * @return false when every store had already staged `batchId`
     */
-  def appendMultiTopic(
+  def appendTopics(
       mutations: DataFrame,
       batchId: Long,
       stores: Map[String, StagedStore],
       validatePk: Map[String, (Int, Seq[String])]
-  ): Unit = {
-    import org.apache.spark.sql.functions._
-    require(stores.nonEmpty)
-    val pending: Map[String, StagedStore] = stores.filter { case (_, st) =>
-      !Files.exists(st.markerDir.resolve(s"$batchId"))
-    }
-    if (pending.isEmpty) return
-    val topics = pending.keys.toSeq.sorted
-    val muts = mutations.filter(col("topic").isin(topics.map(lit): _*))
+  ): Boolean =
+    stageTopics(mutations, col(TOPIC), batchId, stores, validatePk)
 
-    // per-topic seq and ts-bucket width, folded into single columns
-    val seqOf: Map[String, Long] =
-      pending.map { case (t, st) => t -> (st.currentSeq() + 1) }
-    val seqCol = topics.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("topic") === t, lit(seqOf(t))).otherwise(acc)
+  /** [[appendTopics]] with the routing column given as `topic`: a literal
+    * for [[StagedStore.append]], so the routing constant-folds at plan time
+    * and a single table's write evaluates no per-row routing.
+    */
+  private def stageTopics(
+      mutations: DataFrame,
+      topic: Column,
+      batchId: Long,
+      stores: Map[String, StagedStore],
+      validatePk: Map[String, (Int, Seq[String])]
+  ): Boolean = {
+    val pending = stores.toSeq.sortBy(_._1).filterNot { case (_, st) =>
+      Files.exists(st.marker(batchId))
     }
-    val bucketCol = topics.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("topic") === t, floor(col("nanos") / pending(t).bucketNanos))
-        .otherwise(acc)
-    }
-
-    val spillRoot = Files.createTempDirectory(s"graft-multistage-$batchId")
-    val spillDir = spillRoot.resolve("data").toString
-    val staged = muts
-      .withColumn(SEQ, seqCol)
-      .withColumn(TS_BUCKET, bucketCol)
-      .repartition(col("topic"), col(TS_BUCKET), pmod(xxhash64(col("key")), lit(4)))
-
-    // ONE drift aggregation for every topic (groupBy replaces T Observations)
-    val keyArr = from_json(col("key"), org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType))
-    val missingPkCol = validatePk.foldLeft(lit(false)) { case (acc, (t, (_, names))) =>
-      if (names.isEmpty) acc // PK-less topic: rowid is synthesized at plan time
-      else
-        when(
-          col("topic") === t,
-          col("data").isNotNull &&
-            names.map(n => get_json_object(col("data"), s"$$.$n").isNull).reduce(_ || _)
-        ).otherwise(acc)
-    }
-    val summary = muts
-      .groupBy(col("topic"))
-      .agg(
-        collect_set(size(keyArr)).as("arities"),
-        array_distinct(flatten(collect_set(expr("json_object_keys(data)"))))
-          .as("fields"),
-        max(when(missingPkCol, 1).otherwise(0)).as("missing_pk")
-      )
-      .collect()
-      .map(r =>
-        r.getString(0) -> ((r.getSeq[Int](1), r.getSeq[String](2), !r.isNullAt(3) && r.getInt(3) == 1))
-      )
-      .toMap
-
-    validatePk.foreach { case (t, (arity, names)) =>
-      summary.get(t).foreach { case (arities, _, missing) =>
-        arities.find(_ != arity).foreach { got =>
-          throw new graft.model.SchemaDriftException(
-            s"[$t] the mutation key has $got values, expected $arity"
-          )
-        }
-        if (missing) {
-          throw new graft.model.SchemaDriftException(
-            s"[$t] missing primary-key column in payload; expected all of " +
-              names.mkString("[", ", ", "]")
-          )
-        }
+    if (pending.isEmpty) return false
+    // per-store values folded into single columns (constant for one table)
+    def perStore(f: ((String, StagedStore), Int) => Column): Column =
+      pending.zipWithIndex.foldLeft(lit(null)) { case (acc, (ts, i)) =>
+        when(topic === ts._1, f(ts, i)).otherwise(acc)
       }
+    val seqs = pending.map { case (_, st) => st.currentSeq() + 1 }
+    val multi = pending.size > 1
+    val obs = org.apache.spark.sql.Observation(
+      // globally unique: Observations match by name on the shared listener
+      // bus, so two sessions staging one batch id must not read each
+      // other's drift metrics
+      s"stage-$batchId-${java.util.UUID.randomUUID()}"
+    )
+    val drift = DriftSummary.columns(
+      topic, validatePk.map { case (t, (_, names)) => t -> names })
+    val staged = mutations
+      .filter(topic.isin(pending.map(_._1): _*))
+      .withColumn(SEQ, perStore((_, i) => lit(seqs(i))))
+      .withColumn(TS_BUCKET, perStore { case ((_, st), _) => floor(col("nanos") / st.bucketNanos) })
+      .observe(obs, drift.head, drift.tail: _*)
+    // one store writes its buckets straight; several add a leading
+    // store-index level (partition columns stay out of the files)
+    val (rows, partitions) =
+      if (multi) (staged.withColumn(STORE, perStore((_, i) => lit(i))), Seq(STORE, TS_BUCKET))
+      else (staged, Seq(TS_BUCKET))
+
+    val host = pending.head._2
+    // reclaim orphans of killed writers (a scratch tree is live for the
+    // duration of one append job; 30 min is far past any batch)
+    listDir(Paths.get(host.root)).foreach { p =>
+      if (p.getFileName.toString.startsWith("_scratch-") &&
+        Files.getLastModifiedTime(p).toMillis < System.currentTimeMillis() - 30 * 60 * 1000L)
+        deleteRecursively(p)
     }
+    val scratch = Files.createTempDirectory(Paths.get(host.root), "_scratch-")
+    try {
+      val out = scratch.resolve("out")
+      rows.drop(TOPIC).write.mode("overwrite").partitionBy(partitions: _*).parquet(out.toString)
+      val summary = DriftSummary.decode(obs.get)
+      validatePk.foreach { case (t, (arity, names)) =>
+        summary.get(t).foreach(DriftSummary.check(t, _, arity, names))
+      }
+      pending.zipWithIndex.foreach { case ((t, st), i) =>
+        adopt(if (multi) out.resolve(s"$STORE=$i") else out, Paths.get(st.dataDir))
+        Files.writeString(st.seqFile, math.max(st.currentSeq(), seqs(i)).toString)
+        st.recordFields(summary.get(t).map(_.fields.toSeq).getOrElse(Nil))
+        Files.writeString(st.marker(batchId), s"""{"seq":${seqs(i)}}""")
+      }
+    } finally deleteRecursively(scratch)
+    true
+  }
 
-    staged
-      .withColumnRenamed("topic", "__topic")
-      .write
-      .mode("overwrite")
-      .partitionBy("__topic", TS_BUCKET) // partition cols stay out of files
-      .parquet(spillDir)
-
-    // adopt: move each topic's ts_bucket part files into its store (driver
-    // renames — no data pass), bump seq, fold the field set into the
-    // compacted `_fields` file, then write the idempotence marker
-    topics.foreach { t =>
-      val st = pending(t)
-      val topicDir = Paths.get(spillDir, s"__topic=$t")
-      listDir(topicDir).foreach { bucketDir =>
-        val name = bucketDir.getFileName.toString // ts_bucket=N
-        if (name.startsWith(s"$TS_BUCKET=")) {
-          val target = Paths.get(st.root, "data", name)
-          Files.createDirectories(target)
-          listDir(bucketDir).foreach { f =>
-            if (f.getFileName.toString.endsWith(".parquet")) {
+  /** Move the parquet files of every `ts_bucket=N` dir under `from` into
+    * `to/ts_bucket=N`.
+    */
+  private def adopt(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+    listDir(from).filter(_.getFileName.toString.startsWith(s"$TS_BUCKET=")).foreach {
+      bucketDir =>
+        val target = to.resolve(bucketDir.getFileName)
+        listDir(bucketDir).filter(_.getFileName.toString.endsWith(".parquet")).foreach { f =>
+          var tries = 0
+          var done = false
+          while (!done) {
+            try {
+              Files.createDirectories(target)
               Files.move(f, target.resolve(f.getFileName))
+              done = true
+            } catch {
+              case _: java.nio.file.NoSuchFileException if tries < 3 =>
+                tries += 1
             }
           }
         }
-      }
-      Files.writeString(st.seqFile, seqOf(t).toString)
-      st.recordFields(summary.get(t).map(_._2).getOrElse(Nil))
-      Files.writeString(
-        st.markerDir.resolve(s"$batchId"),
-        s"""{"seq":${seqOf(t)}}"""
-      )
     }
-    // scratch cleanup (only empty partition dirs and _SUCCESS remain)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(spillRoot)
-  }
 }

@@ -53,6 +53,9 @@ final case class CommitMeta(
     committedAtMs: Long
 ) {
 
+  /** The resolved fence this commit carried the table to. */
+  def resolved: graft.model.Hlc = graft.model.Hlc(resolvedNanos, resolvedLogical)
+
   /** Type-safe metric read. `metrics` is declared `Map[String, Long]`, but a
     * meta RE-READ from JSON carries boxed Integers for small values (Jackson
     * + type erasure) — pattern-matching through Number absorbs both.

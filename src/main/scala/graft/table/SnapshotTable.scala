@@ -596,7 +596,7 @@ final class SnapshotTable(
       bucketed.unpersist()
       // empty batch: still record the fence advance as a metadata-only commit
       val version = prev.map(_.version + 1).getOrElse(1L)
-      val pf = prev.map(m => Hlc(m.resolvedNanos, m.resolvedLogical)).getOrElse(Hlc.Zero)
+      val pf = prev.map(_.resolved).getOrElse(Hlc.Zero)
       val fo = if (resolved > pf) resolved else pf
       val meta = CommitMeta(
         version = version,
@@ -637,9 +637,7 @@ final class SnapshotTable(
       if (deltaMode) None
       else Some(alignTo(readRaw(Some(touched)), target))
 
-    val prevFence = prev
-      .map(m => Hlc(m.resolvedNanos, m.resolvedLogical))
-      .getOrElse(Hlc.Zero)
+    val prevFence = prev.map(_.resolved).getOrElse(Hlc.Zero)
     // the fence never regresses (a replayed old window can merge — its rows
     // no-op against newer LWW state — but must not move the fence backward,
     // mirroring the reference's monotonic Mark, resolver.go:154-157)
@@ -659,8 +657,8 @@ final class SnapshotTable(
         var continue = true
         while (continue && v >= 1) {
           log.tryRead(v) match {
-            case Some(m) if Hlc(m.resolvedNanos, m.resolvedLogical) < prevFence =>
-              h = Hlc(m.resolvedNanos, m.resolvedLogical); continue = false
+            case Some(m) if m.resolved < prevFence =>
+              h = m.resolved; continue = false
             case Some(_) => v -= 1
             case None => continue = false // vacuumed past: keep tombstones
           }

@@ -276,9 +276,35 @@ class ConcurrentWriterSpec extends SparkSpec {
         )
       )
     )
+    // any FAILED_READ_FILE sub-condition, typed or only in the message
+    val unreadable = new org.apache.spark.SparkException(
+      "FAILED_READ_FILE.NO_HINT", Map("path" -> "/x/y.parquet"), null)
+    assert(isMissingFileRead(new RuntimeException("job aborted", unreadable)))
+    assert(isMissingFileRead(new RuntimeException("[FAILED_READ_FILE.NO_HINT] reading /x")))
     assert(!isMissingFileRead(new RuntimeException("plain failure")))
     // a cycle-free walk even on pathological self-caused chains
     val self = new RuntimeException("loop")
     assert(!isMissingFileRead(new RuntimeException("outer", self)))
+  }
+
+  test("lost-race check: a covered fence with an unknown failure is logged, then re-raised") {
+    import graft.loop.ReplayLoop.lostRace
+    val missing = new java.io.FileNotFoundException("/x/y.parquet")
+    def logged(f: => Boolean): (Boolean, String) = {
+      val out = new java.io.ByteArrayOutputStream()
+      val r = Console.withOut(out)(f)
+      (r, out.toString("UTF-8"))
+    }
+    // a missing-file read under a covering fence is a lost race, silently
+    assert(logged(lostRace(missing, covered = true)) == ((true, "")))
+    // nothing is a lost race while the fence does not cover the target
+    assert(logged(lostRace(missing, covered = false)) == ((false, "")))
+    // a covered fence with an unknown failure re-raises, logged first
+    val unknown = new org.apache.spark.SparkException(
+      "DIVIDE_BY_ZERO", Map("config" -> "spark.sql.ansi.enabled"), null)
+    val (raced, log) = logged(lostRace(new IllegalStateException("wrapped", unknown), covered = true))
+    assert(!raced)
+    assert(log.contains("java.lang.IllegalStateException"), log)
+    assert(log.contains("condition DIVIDE_BY_ZERO"), log)
   }
 }

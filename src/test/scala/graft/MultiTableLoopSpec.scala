@@ -400,7 +400,7 @@ class MultiTableLoopSpec extends SparkSpec {
     assert(loop.committedFence == Hlc(125L, 0))
   }
 
-  test("appendMultiTopic: one-pass staging, idempotent replays, per-topic drift, seq bumps") {
+  test("appendTopics: one-pass staging, idempotent replays, per-topic drift, seq bumps") {
     val base = tmpDir("amt")
     val t1 = new StagedStore(spark, s"$base/t1", bucketNanos = 100L)
     val t2 = new StagedStore(spark, s"$base/t2", bucketNanos = 1000L)
@@ -415,7 +415,7 @@ class MultiTableLoopSpec extends SparkSpec {
       ("t2", "[7]", """{"pk":7,"w":9}""", 50L, 0, "f")
     ).toDF("topic", "key", "data", "nanos", "logical", "src_file")
 
-    StagedStore.appendMultiTopic(muts, batchId = 1L, stores, validate)
+    StagedStore.appendTopics(muts, batchId = 1L, stores, validate)
     // rows landed in the right stores and ts buckets; seq stamped per store
     val r1 = t1.readAll().orderBy("nanos")
     assert(r1.count() == 2)
@@ -428,25 +428,29 @@ class MultiTableLoopSpec extends SparkSpec {
     assert(t2.observedFields() == Set("pk", "w"))
 
     // replay of the same batch id is a no-op (markers)
-    StagedStore.appendMultiTopic(muts, batchId = 1L, stores, validate)
+    StagedStore.appendTopics(muts, batchId = 1L, stores, validate)
     assert(t1.readAll().count() == 2 && t2.readAll().count() == 1)
     assert(t1.currentSeq() == 1L)
 
     // a second batch bumps seq and appends
     val muts2 = Seq(("t1", "[3]", """{"pk":3,"v":"c"}""", 60L, 0, "f"))
       .toDF("topic", "key", "data", "nanos", "logical", "src_file")
-    StagedStore.appendMultiTopic(muts2, batchId = 2L, stores, validate)
+    StagedStore.appendTopics(muts2, batchId = 2L, stores, validate)
     assert(t1.currentSeq() == 2L)
     assert(t1.readAll().count() == 3)
     // t2 had no rows in batch 2 but gets its marker (replay-safe) anyway
     assert(t2.readAll().count() == 1)
 
     // per-topic drift: a missing PK in ONE topic fails the whole batch
+    val seqBefore = t2.currentSeq()
     val bad = Seq(("t2", "[9]", """{"w":1}""", 70L, 0, "f"))
       .toDF("topic", "key", "data", "nanos", "logical", "src_file")
     val e = intercept[graft.model.SchemaDriftException] {
-      StagedStore.appendMultiTopic(bad, batchId = 3L, stores, validate)
+      StagedStore.appendTopics(bad, batchId = 3L, stores, validate)
     }
     assert(e.getMessage.contains("[t2]"))
+    // the rejected batch staged nothing
+    assert(t2.readAll().count() == 1 && t2.currentSeq() == seqBefore)
+    assert(t1.readAll().count() == 3)
   }
 }

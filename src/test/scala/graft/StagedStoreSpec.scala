@@ -72,4 +72,19 @@ class StagedStoreSpec extends SparkSpec {
       "legacy marker fields must fold into _fields on the first write"
     )
   }
+
+  test("a drift-rejected append stages nothing, so retries never pile up copies") {
+    val st = new StagedStore(spark, tmpDir("stagedrift"), bucketNanos = 100L)
+    // key arity 1 against a 2-column PK
+    val bad = Seq(("[1]", """{"a":1,"b":2}""", 10L, 0, "f"))
+      .toDF("key", "data", "nanos", "logical", "src_file")
+    (1 to 2).foreach { _ =>
+      intercept[graft.model.SchemaDriftException] {
+        st.append(bad, batchId = 1L, validatePk = Some((2, Seq("a", "b"))))
+      }
+    }
+    assert(st.readAll().count() == 0)
+    assert(st.currentSeq() == 0L)
+    assert(st.observedFields().isEmpty)
+  }
 }
