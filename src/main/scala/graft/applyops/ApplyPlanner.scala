@@ -572,11 +572,13 @@ object DriftSummary {
     * no names, are never PK-probed.
     */
   def columns(topic: Column, pkSrc: Map[String, Seq[String]]): Seq[Column] = {
+    // `isin`, not `===`: a single table's topic is a literal, and `===`
+    // between equal literals logs a "trivially true equals" warning
     val missingPk = pkSrc.foldLeft(lit(false)) { case (acc, (t, names)) =>
       if (names.isEmpty) acc
       else
         when(
-          topic === t,
+          topic.isin(t),
           col("data").isNotNull &&
             names.map(n => get_json_object(col("data"), s"$$.$n").isNull).reduce(_ || _)
         ).otherwise(acc)

@@ -29,11 +29,84 @@ object Changefeed {
   val RESOLVED = "is_resolved"
   val SRC_FILE = "src_file"
 
-  private def hlcNanos(c: Column): Column =
-    substring_index(c, ".", 1).cast(LongType)
-  private def hlcLogical(c: Column): Column =
-    when(c.contains("."), substring_index(c, ".", -1).cast(IntegerType))
-      .otherwise(lit(0))
+  // The unified-feed core: every codec here and in [[Envelopes]] is built
+  // from these helpers, the analog of the one mutation model the
+  // reference's per-URL handlers share (internal/source/cdc/handler.go).
+
+  /** The source-file column of raw `lines`: a pre-captured `src_file`
+    * survives caching, input_file_name() does not (it evaluates to "" once
+    * the scan is behind a cache node).
+    */
+  private[feed] def srcFile(lines: DataFrame, withFile: Boolean): Column =
+    if (lines.columns.contains(SRC_FILE)) col(SRC_FILE)
+    else if (withFile) input_file_name()
+    else lit("")
+
+  /** `rows` projected to the unified schema, `topic` (when given) first,
+    * with the `<nanos>.<logical>` `stamp` split (no `.logical` part means
+    * logical 0); rows whose stamp is missing are dropped. `rows` carries
+    * `src_file`.
+    */
+  private[feed] def unified(
+      rows: DataFrame,
+      topic: Option[Column],
+      key: Column,
+      data: Column,
+      stamp: Column,
+      resolved: Column
+  ): DataFrame =
+    rows
+      .select(
+        topic.map(_.as("topic")).toSeq ++ Seq(
+          key.as(KEY),
+          data.as(DATA),
+          substring_index(stamp, ".", 1).cast(LongType).as(NANOS),
+          when(stamp.contains("."), substring_index(stamp, ".", -1).cast(IntegerType))
+            .otherwise(lit(0))
+            .as(LOGICAL),
+          resolved.as(RESOLVED),
+          col(SRC_FILE)
+        ): _*
+      )
+      .filter(col(NANOS).isNotNull)
+
+  /** Resolved-marker rows of `rows`, one per non-null `stamp`: key, data
+    * (and topic, when `withTopic`: a global marker) are null.
+    */
+  private[feed] def markerRows(rows: DataFrame, stamp: Column, withTopic: Boolean): DataFrame = {
+    val none = lit(null).cast(StringType)
+    unified(rows, if (withTopic) Some(none) else None, none, none, stamp, lit(true))
+  }
+
+  /** Mutation rows of CDC-query row payloads held in `rowJson`: the
+    * payload carries `__event__` and the stamp under `__crdb__.updated`,
+    * and `key` builds the key column from the parsed envelope, whose
+    * fields include `pkCols` as raw JSON text (so numeric keys serialize
+    * exactly as on the wire). Deletes get `data = null` even though the
+    * wire carries a row image (query_payload.go:117-139). The envelope is
+    * stripped STRUCTURALLY ([[graft.functions.JsonDropKeys]]): any key
+    * order, nested `__crdb__` and envelope-name lookalikes inside string
+    * values parse correctly — the reference's decode-into-map-then-delete
+    * (query_payload.go:117-158), not its wire bytes.
+    */
+  private[feed] def queryRows(
+      rows: DataFrame,
+      rowJson: Column,
+      pkCols: Seq[String],
+      topic: Option[Column]
+  )(key: Column => Column): DataFrame = {
+    graft.functions.GraftFunctions.register(rows.sparkSession)
+    val envSchema = StructType(
+      Seq(
+        StructField("__event__", StringType),
+        StructField("__crdb__", StructType(Seq(StructField("updated", StringType))))
+      ) ++ pkCols.map(c => StructField(c, StringType))
+    )
+    val env = from_json(rowJson, envSchema)
+    val data = when(env.getField("__event__") === "delete", lit(null).cast(StringType))
+      .otherwise(graft.functions.GraftFunctions.jsonDropKeys(rowJson, "__event__", "__crdb__"))
+    unified(rows, topic, key(env), data, env.getField("__crdb__").getField("updated"), lit(false))
+  }
 
   /** Parse a DataFrame of raw ndjson lines (column `value`) into the unified
     * mutation/resolved schema:
@@ -57,24 +130,14 @@ object Changefeed {
         StructField("resolved", StringType)
       )
     )
-    // a pre-captured file column survives caching; input_file_name() does
-    // not (it evaluates to "" once the scan is behind a cache node)
-    val srcCol =
-      if (lines.columns.contains(SRC_FILE)) col(SRC_FILE)
-      else if (withFile) input_file_name()
-      else lit("")
-    val stamp = coalesce(col("__j.resolved"), col("__j.updated"))
-    lines
-      .select(from_json(col("value"), envelope).as("__j"), srcCol.as(SRC_FILE))
-      .select(
-        col("__j.key").as(KEY),
-        col("__j.after").as(DATA),
-        hlcNanos(stamp).as(NANOS),
-        hlcLogical(stamp).as(LOGICAL),
-        col("__j.resolved").isNotNull.as(RESOLVED),
-        col(SRC_FILE)
-      )
-      .filter(col(NANOS).isNotNull)
+    unified(
+      lines.select(from_json(col("value"), envelope).as("__j"), srcFile(lines, withFile).as(SRC_FILE)),
+      topic = None,
+      key = col("__j.key"),
+      data = col("__j.after"),
+      stamp = coalesce(col("__j.resolved"), col("__j.updated")),
+      resolved = col("__j.resolved").isNotNull
+    )
   }
 
   /** Column expression encoding one parsed-feed row back to its ndjson line.

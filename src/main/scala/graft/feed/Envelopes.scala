@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Hlc
+import Changefeed.{SRC_FILE, markerRows, queryRows, srcFile, unified}
 
 /** The reference's other ingest envelopes, re-expressed declaratively.
   *
@@ -29,9 +30,10 @@ import graft.model.Hlc
   *    digits are YYYYMMDDHHMMSS + 9 nanos digits + 10 logical digits
   *    (reference: internal/source/cdc/resolved.go:69-101).
   *
-  * Every parser here produces the unified feed schema of
-  * [[Changefeed.parseLines]], so any of them plugs into the replay loop via
-  * `ReplayLoop(parse = ...)`.
+  * Every parser here is built from the unified-feed core in [[Changefeed]]
+  * (stamp split, source-file column, marker rows, CDC-query rows) and
+  * produces the schema of [[Changefeed.parseLines]], so any of them plugs
+  * into the replay loop via `ReplayLoop(parse = ...)`.
   */
 object Envelopes {
 
@@ -56,155 +58,38 @@ object Envelopes {
         StructField("updated", StringType)
       )
     )
-    // pre-captured file column survives caching; input_file_name() doesn't
-    val file =
-      if (lines.columns.contains(Changefeed.SRC_FILE)) col(Changefeed.SRC_FILE)
-      else if (withFile) input_file_name()
-      else lit("")
-
-    def stamped(df: DataFrame): DataFrame =
-      df.select(
-        col("topic"),
-        col(Changefeed.KEY),
-        col(Changefeed.DATA),
-        substring_index(col("stamp"), ".", 1).cast(LongType).as(Changefeed.NANOS),
-        when(
-          col("stamp").contains("."),
-          substring_index(col("stamp"), ".", -1).cast(IntegerType)
-        ).otherwise(lit(0)).as(Changefeed.LOGICAL),
-        col(Changefeed.RESOLVED),
-        col(Changefeed.SRC_FILE)
-      ).filter(col(Changefeed.NANOS).isNotNull)
-
     val base = lines.select(
       from_json(col("value"), bodySchema).as("__b"),
-      file.as(Changefeed.SRC_FILE)
+      srcFile(lines, withFile).as(SRC_FILE)
     )
-    val muts = stamped(
-      base
-        .select(explode(col("__b.payload")).as("elem"), col(Changefeed.SRC_FILE))
-        .select(from_json(col("elem"), elemSchema).as("__e"), col(Changefeed.SRC_FILE))
-        .select(
-          col("__e.topic").as("topic"),
-          col("__e.key").as(Changefeed.KEY),
-          col("__e.after").as(Changefeed.DATA),
-          col("__e.updated").as("stamp"),
-          lit(false).as(Changefeed.RESOLVED),
-          col(Changefeed.SRC_FILE)
-        )
-    )
-    val res = stamped(
-      base
-        .filter(col("__b.resolved").isNotNull)
-        .select(
-          lit(null).cast(StringType).as("topic"),
-          lit(null).cast(StringType).as(Changefeed.KEY),
-          lit(null).cast(StringType).as(Changefeed.DATA),
-          col("__b.resolved").as("stamp"),
-          lit(true).as(Changefeed.RESOLVED),
-          col(Changefeed.SRC_FILE)
-        )
-    )
-    muts.unionByName(res)
+    val elems = base
+      .select(explode(col("__b.payload")).as("elem"), col(SRC_FILE))
+      .select(from_json(col("elem"), elemSchema).as("__e"), col(SRC_FILE))
+    unified(elems, Some(col("__e.topic")), col("__e.key"), col("__e.after"),
+      col("__e.updated"), lit(false))
+      .unionByName(markerRows(base, col("__b.resolved"), withTopic = true))
   }
 
   /** Parse CDC-query ndjson (column `value`): payload rows carry
     * `__event__` and `__crdb__.updated`; the key is built positionally from
-    * `pkCols`. Output matches [[Changefeed.parseLines]]'s schema (deletes
-    * get `data = null` even though the wire carries a row image — key
-    * extraction happens first, mirroring query_payload.go:117-139).
+    * `pkCols`. Output matches [[Changefeed.parseLines]]'s schema (see
+    * [[Changefeed.queryRows]] for deletes and envelope stripping).
     */
-  /** The unified-feed columns of one CDC-query row payload held in
-    * `rowJson`. Envelope stripping is STRUCTURAL ([[graft.functions
-    * .JsonDropKeys]]): any key order, nested `__crdb__`, and envelope-name
-    * lookalikes inside string values all parse correctly — mirroring the
-    * reference's decode-into-map-then-delete (query_payload.go:117-158),
-    * not its wire bytes.
-    */
-  private def queryRowCols(rowJson: Column, pkCols: Seq[String]): Seq[Column] = {
-    // one from_json covers the envelope fields AND the positional PK
-    // values (string fields keep raw JSON text, so numeric keys serialize
-    // exactly as they appeared on the wire)
-    val envSchema = StructType(
-      Seq(
-        StructField("__event__", StringType),
-        StructField(
-          "__crdb__",
-          StructType(Seq(StructField("updated", StringType)))
-        )
-      ) ++ pkCols.map(c => StructField(c, StringType))
-    )
-    val env = from_json(rowJson, envSchema)
-    val stamp = env.getField("__crdb__").getField("updated")
-    val event = env.getField("__event__")
-    val keyArr = to_json(array(pkCols.map(env.getField): _*))
-    val dataClean =
-      graft.functions.GraftFunctions.jsonDropKeys(rowJson, "__event__", "__crdb__")
-    Seq(
-      keyArr.as(Changefeed.KEY),
-      when(event === "delete", lit(null).cast(StringType))
-        .otherwise(dataClean)
-        .as(Changefeed.DATA),
-      substring_index(stamp, ".", 1).cast(LongType).as(Changefeed.NANOS),
-      when(
-        stamp.contains("."),
-        substring_index(stamp, ".", -1).cast(IntegerType)
-      ).otherwise(lit(0)).as(Changefeed.LOGICAL)
-    )
-  }
-
   def parseQueryLines(
       lines: DataFrame,
       pkCols: Seq[String],
       withFile: Boolean = true
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(lines.sparkSession)
-    val file =
-      if (lines.columns.contains(Changefeed.SRC_FILE)) col(Changefeed.SRC_FILE)
-      else if (withFile) input_file_name()
-      else lit("")
-    val base = lines.select(col("value"), file.as(Changefeed.SRC_FILE))
-    val muts = base
-      .select(
-        queryRowCols(col("value"), pkCols) ++ Seq(
-          lit(false).as(Changefeed.RESOLVED),
-          col(Changefeed.SRC_FILE)
-        ): _*
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
+    val base = lines.select(col("value"), srcFile(lines, withFile).as(SRC_FILE))
     // in-stream resolved markers `{"__crdb__":{"resolved":"<hlc>"}}` — the
     // webhook-query marker shape carried over the ndjson transport. (The
     // reference signals query-feed resolved timestamps as URL-side
     // `<33-digit>.RESOLVED` requests, resolved_query.go:13-48; a file feed
     // has no URL side-channel, so the marker rides the stream exactly like
     // the plain ndjson envelope's `{"resolved":...}` lines.)
-    val resolved = from_json(
-      col("value"),
-      StructType(
-        Seq(
-          StructField(
-            "__crdb__",
-            StructType(Seq(StructField("resolved", StringType)))
-          )
-        )
-      )
-    ).getField("__crdb__").getField("resolved")
-    val res = base
-      .select(
-        lit(null).cast(StringType).as(Changefeed.KEY),
-        lit(null).cast(StringType).as(Changefeed.DATA),
-        substring_index(resolved, ".", 1).cast(LongType).as(Changefeed.NANOS),
-        when(
-          resolved.contains("."),
-          substring_index(resolved, ".", -1).cast(IntegerType)
-        ).otherwise(lit(0)).as(Changefeed.LOGICAL),
-        lit(true).as(Changefeed.RESOLVED),
-        col(Changefeed.SRC_FILE)
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
-    muts.unionByName(res)
+    val resolved = from_json(col("value"), crdbResolved).getField("__crdb__").getField("resolved")
+    queryRows(base, col("value"), pkCols, topic = None)(positionalKey(pkCols))
+      .unionByName(markerRows(base, resolved, withTopic = false))
   }
 
   /** Parse webhook CDC-query bodies (column `value`) — the v23.1 webhook
@@ -220,55 +105,8 @@ object Envelopes {
       lines: DataFrame,
       pkCols: Seq[String],
       withFile: Boolean = true
-  ): DataFrame = {
-    graft.functions.GraftFunctions.register(lines.sparkSession)
-    val file =
-      if (lines.columns.contains(Changefeed.SRC_FILE)) col(Changefeed.SRC_FILE)
-      else if (withFile) input_file_name()
-      else lit("")
-    val bodySchema = StructType(
-      Seq(
-        StructField("payload", ArrayType(StringType)),
-        StructField(
-          "__crdb__",
-          StructType(Seq(StructField("resolved", StringType)))
-        )
-      )
-    )
-    val base = lines.select(
-      from_json(col("value"), bodySchema).as("__b"),
-      file.as(Changefeed.SRC_FILE)
-    )
-
-    // payload elements stay raw JSON text; each is one CDC-query row
-    val muts = base
-      .select(explode(col("__b.payload")).as("elem"), col(Changefeed.SRC_FILE))
-      .select(
-        queryRowCols(col("elem"), pkCols) ++ Seq(
-          lit(false).as(Changefeed.RESOLVED),
-          col(Changefeed.SRC_FILE)
-        ): _*
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
-    val resolved = col("__b.__crdb__.resolved")
-    val res = base
-      .filter(resolved.isNotNull)
-      .select(
-        lit(null).cast(StringType).as(Changefeed.KEY),
-        lit(null).cast(StringType).as(Changefeed.DATA),
-        substring_index(resolved, ".", 1).cast(LongType).as(Changefeed.NANOS),
-        when(
-          resolved.contains("."),
-          substring_index(resolved, ".", -1).cast(IntegerType)
-        ).otherwise(lit(0)).as(Changefeed.LOGICAL),
-        lit(true).as(Changefeed.RESOLVED),
-        col(Changefeed.SRC_FILE)
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
-    muts.unionByName(res)
-  }
+  ): DataFrame =
+    webhookQuery(lines, withFile, pkCols, topic = None)(positionalKey(pkCols))
 
   /** Parse webhook CDC-query bodies for the MULTI-TABLE loop. The
     * reference routes a webhook-query body to its one target table by URL
@@ -290,88 +128,47 @@ object Envelopes {
       pkColsByTopic: Map[String, Seq[String]],
       withFile: Boolean = true
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(lines.sparkSession)
-    val file =
-      if (lines.columns.contains(Changefeed.SRC_FILE)) col(Changefeed.SRC_FILE)
-      else if (withFile) input_file_name()
-      else lit("")
+    val allPk = pkColsByTopic.values.flatten.toSeq.distinct.sorted
+    val topic = regexp_extract(col(SRC_FILE), "topic=([^/]+)", 1)
+    webhookQuery(lines, withFile, allPk, Some(topic)) { env =>
+      pkColsByTopic.toSeq.sortBy(_._1).foldLeft(lit(null).cast(StringType)) {
+        case (acc, (t, pks)) => when(col("topic") === t, positionalKey(pks)(env)).otherwise(acc)
+      }
+    }
+  }
+
+  /** `{"__crdb__":{"resolved":...}}`: the CDC-query resolved marker. */
+  private val crdbResolved = StructType(
+    Seq(StructField("__crdb__", StructType(Seq(StructField("resolved", StringType)))))
+  )
+
+  /** The CDC-query key: a JSON array of the envelope's `pkCols` values. */
+  private def positionalKey(pkCols: Seq[String])(env: Column): Column =
+    to_json(array(pkCols.map(env.getField): _*))
+
+  /** Webhook CDC-query bodies: payload elements are CDC-query rows keyed by
+    * `key` over `pkCols`, and a body-level `__crdb__.resolved` is a marker.
+    * A `topic` (an expression over `src_file`) leads the output as column
+    * `topic`, and then markers are global (null topic).
+    */
+  private def webhookQuery(
+      lines: DataFrame,
+      withFile: Boolean,
+      pkCols: Seq[String],
+      topic: Option[Column]
+  )(key: Column => Column): DataFrame = {
     val bodySchema = StructType(
-      Seq(
-        StructField("payload", ArrayType(StringType)),
-        StructField(
-          "__crdb__",
-          StructType(Seq(StructField("resolved", StringType)))
-        )
-      )
+      Seq(StructField("payload", ArrayType(StringType))) ++ crdbResolved.fields
     )
     val base = lines.select(
       from_json(col("value"), bodySchema).as("__b"),
-      regexp_extract(file, "topic=([^/]+)", 1).as("topic"),
-      file.as(Changefeed.SRC_FILE)
+      srcFile(lines, withFile).as(SRC_FILE)
     )
-
-    val allPk = pkColsByTopic.values.flatten.toSeq.distinct.sorted
-    val envSchema = StructType(
-      Seq(
-        StructField("__event__", StringType),
-        StructField(
-          "__crdb__",
-          StructType(Seq(StructField("updated", StringType)))
-        )
-      ) ++ allPk.map(c => StructField(c, StringType))
-    )
-    val exploded = base
-      .select(
-        col("topic"),
-        explode(col("__b.payload")).as("elem"),
-        col(Changefeed.SRC_FILE)
-      )
-    val env = from_json(col("elem"), envSchema)
-    val stamp = env.getField("__crdb__").getField("updated")
-    val event = env.getField("__event__")
-    val keyArr = pkColsByTopic.toSeq.sortBy(_._1).foldLeft(
-      lit(null).cast(StringType)
-    ) { case (acc, (t, pks)) =>
-      when(col("topic") === t, to_json(array(pks.map(env.getField): _*)))
-        .otherwise(acc)
-    }
-    val dataClean =
-      graft.functions.GraftFunctions.jsonDropKeys(col("elem"), "__event__", "__crdb__")
-    val muts = exploded
-      .select(
-        col("topic"),
-        keyArr.as(Changefeed.KEY),
-        when(event === "delete", lit(null).cast(StringType))
-          .otherwise(dataClean)
-          .as(Changefeed.DATA),
-        substring_index(stamp, ".", 1).cast(LongType).as(Changefeed.NANOS),
-        when(
-          stamp.contains("."),
-          substring_index(stamp, ".", -1).cast(IntegerType)
-        ).otherwise(lit(0)).as(Changefeed.LOGICAL),
-        lit(false).as(Changefeed.RESOLVED),
-        col(Changefeed.SRC_FILE)
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
-    val resolved = col("__b.__crdb__.resolved")
-    val res = base
-      .filter(resolved.isNotNull)
-      .select(
-        lit(null).cast(StringType).as("topic"),
-        lit(null).cast(StringType).as(Changefeed.KEY),
-        lit(null).cast(StringType).as(Changefeed.DATA),
-        substring_index(resolved, ".", 1).cast(LongType).as(Changefeed.NANOS),
-        when(
-          resolved.contains("."),
-          substring_index(resolved, ".", -1).cast(IntegerType)
-        ).otherwise(lit(0)).as(Changefeed.LOGICAL),
-        lit(true).as(Changefeed.RESOLVED),
-        col(Changefeed.SRC_FILE)
-      )
-      .filter(col(Changefeed.NANOS).isNotNull)
-
-    muts.unionByName(res)
+    // payload elements stay raw JSON text; each is one CDC-query row
+    val elems = base.select(explode(col("__b.payload")).as("elem"), col(SRC_FILE))
+    queryRows(topic.fold(elems)(elems.withColumn("topic", _)), col("elem"), pkCols,
+      topic.map(_ => col("topic")))(key)
+      .unionByName(markerRows(base, col("__b.__crdb__.resolved"), withTopic = topic.nonEmpty))
   }
 
   /** Parse the 33-digit resolved-filename timestamp
@@ -390,23 +187,5 @@ object Envelopes {
       val logical = digits.substring(23, 33).toInt
       Some(Hlc(inst.getEpochSecond * 1000000000L + nanosInSecond, logical))
     } catch { case _: Exception => None }
-  }
-
-  /** Column variant of [[parseResolvedFilename]] for streams of marker file
-    * names: returns struct(nanos, logical) or null.
-    */
-  def resolvedFilenameCol(name: Column): Column = {
-    val digits = regexp_extract(name, "(\\d{33})\\.RESOLVED", 1)
-    val secs = unix_timestamp(
-      to_timestamp(substring(digits, 1, 14), "yyyyMMddHHmmss")
-    )
-    when(
-      length(digits) === 33,
-      struct(
-        (secs * 1000000000L + substring(digits, 15, 9).cast(LongType))
-          .as("nanos"),
-        substring(digits, 24, 10).cast(IntegerType).as("logical")
-      )
-    ).otherwise(lit(null))
   }
 }

@@ -3,18 +3,33 @@ package graft.loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.applyops.TableSpec
 import graft.feed.Envelopes
 import graft.model.Hlc
 import graft.stage.StagedStore
 import graft.table.SnapshotTable
 
-/** One table's wiring inside a multi-table loop. */
+/** One table's wiring inside either loop: its declared spec, its snapshot
+  * table and its staging store.
+  */
 final case class TableTarget(
     spec: TableSpec,
     table: SnapshotTable,
     stage: StagedStore
-)
+) {
+
+  /** The spec to plan with: the declared config, with the payload columns
+    * the table's committed schema has evolved to (less the extras column),
+    * so a column added by an earlier fence is known to every later one.
+    */
+  def currentSpec: TableSpec = table.payloadSchema() match {
+    case Some(s) =>
+      spec.copy(payloadSchema =
+        StructType(s.fields.filterNot(f => spec.config.extras.contains(f.name))))
+    case None => spec
+  }
+}
 
 /** Multi-table webhook loop: one streaming query consuming webhook-envelope
   * bodies whose payload elements are routed by `topic` to different target
@@ -123,7 +138,7 @@ final class MultiTableLoop(
     }
 
     // stage EVERY table's slice in one Spark job (idempotent per batch)
-    StagedStore.appendTopics(
+    val staged = StagedStore.appendTopics(
       b.mutations.select("topic", "key", "data", "nanos", "logical", "src_file"),
       b.stageKey,
       stores = targets.map { case (topic, t) => topic -> t.stage },
@@ -137,7 +152,10 @@ final class MultiTableLoop(
     )
 
     b.resolved.foreach { target =>
-      inFkOrder(topic => applier(topic).applyFence(target, batchId, Seq(s"batch=$batchId", s"topic=$topic")))
+      inFkOrder { topic =>
+        applier(topic).applyFence(target, batchId, Seq(s"batch=$batchId", s"topic=$topic"),
+          staged(topic))
+      }
     }
   }
 

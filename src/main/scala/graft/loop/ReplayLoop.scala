@@ -31,7 +31,9 @@ import graft.table.SnapshotTable
   *      planner (drift checks → transforms → salted LWW dedup), CAS-gate
   *      against current rows if configured, and MERGE into the snapshot
   *      with idempotence key = the fence — replays of the same window
-  *      no-op;
+  *      no-op; a batch whose markers are all at or below the fence but
+  *      which staged rows (a redelivery) merges those rows under the
+  *      unchanged fence;
   *   5. retire staging partitions below the fence (metadata-only drop).
   * Steps 4-5 are the [[Applier]] that [[MultiTableLoop]] runs per table.
   *
@@ -166,25 +168,10 @@ final class ReplayLoop(
       )
     }
 
-  /** current spec: schema follows the table's committed schema */
-  private def currentSpec: TableSpec = {
-    table.payloadSchema() match {
-      case Some(s) =>
-        // the committed schema may include the extras column; keep declared
-        // config but adopt evolved column set/types
-        initialSpec.copy(payloadSchema =
-          org.apache.spark.sql.types.StructType(
-            s.fields.filterNot(f => initialSpec.config.extras.contains(f.name))
-          )
-        )
-      case None => initialSpec
-    }
-  }
-
   def committedFence: Hlc = ReplayLoop.fenceOf(table)
 
   private def applier: Applier =
-    new Applier(spark, TableTarget(currentSpec, table, stage), saltBuckets,
+    new Applier(spark, TableTarget(initialSpec, table, stage), saltBuckets,
       changelogDir, vacuumKeepVersions)
 
   /** Process one micro-batch of raw ndjson lines. Public for batch-mode
@@ -200,10 +187,8 @@ final class ReplayLoop(
       return
     }
 
-    val specForStage = currentSpec
-    val pkSrc = specForStage.pkCols
-      .map(c => specForStage.config.sourceNames.getOrElse(c, c))
-    ReplayLoop.timed("stage-append", batchId) {
+    val pkSrc = initialSpec.pkCols.map(c => initialSpec.config.sourceNames.getOrElse(c, c))
+    val staged = ReplayLoop.timed("stage-append", batchId) {
       // drift summary (arity / field set / PK presence) rides this write;
       // violations fail the batch here, fields land in the field-set file.
       // A PK-less spec synthesizes its rowid at plan time, so key-arity /
@@ -212,8 +197,8 @@ final class ReplayLoop(
         muts,
         b.stageKey,
         validatePk =
-          if (specForStage.pkCols.isEmpty) None
-          else Some((specForStage.pkCols.size, pkSrc))
+          if (initialSpec.pkCols.isEmpty) None
+          else Some((initialSpec.pkCols.size, pkSrc))
       )
     }
 
@@ -229,7 +214,7 @@ final class ReplayLoop(
       if (!resolvedFromFilenames) None else safeMarkerFence()
 
     (b.resolved.toSeq ++ markerFence).maxOption.foreach { target =>
-      mergeToFence(target, batchId, lineage)
+      mergeToFence(target, batchId, lineage, staged)
     }
   }
 
@@ -273,9 +258,14 @@ final class ReplayLoop(
     * from the post-catch-up drain. The marker gate's high-water rides the
     * commit so a restart without the checkpoint file can recover it.
     */
-  private def mergeToFence(target: Hlc, batchId: Long, lineage: Seq[String]): Unit =
+  private def mergeToFence(
+      target: Hlc,
+      batchId: Long,
+      lineage: Seq[String],
+      staged: Boolean
+  ): Unit =
     applier.applyFence(
-      target, batchId, lineage,
+      target, batchId, lineage, staged,
       if (resolvedFromFilenames) Map("delivered_mtime_hw" -> deliveredMtimeHw) else Map.empty
     )
 
@@ -288,25 +278,15 @@ final class ReplayLoop(
     * listing only.
     */
   private def listFeedEntries()
-      : Seq[(java.nio.file.Path, Long, Boolean, Option[Hlc])] = {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(feedDir)
-    if (!java.nio.file.Files.exists(dir)) Nil
-    else
-      scala.util.Using.resource(java.nio.file.Files.walk(dir, 2)) {
-        _.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map { p =>
-            val name = p.getFileName.toString
-            val isMarker = name.endsWith(".RESOLVED")
-            val hlc =
-              if (isMarker) graft.feed.Envelopes.parseResolvedFilename(name)
-              else None
-            (p, java.nio.file.Files.getLastModifiedTime(p).toMillis, isMarker, hlc)
-          }
-          .toSeq
-      }
-  }
+      : Seq[(java.nio.file.Path, Long, Boolean, Option[Hlc])] =
+    ReplayLoop.feedFiles(feedDir).map { p =>
+      val name = p.getFileName.toString
+      val isMarker = name.endsWith(".RESOLVED")
+      val hlc =
+        if (isMarker) graft.feed.Envelopes.parseResolvedFilename(name)
+        else None
+      (p, java.nio.file.Files.getLastModifiedTime(p).toMillis, isMarker, hlc)
+    }
 
   /** Fence trailing `.RESOLVED` markers after a catch-up pass: once the
     * AvailableNow query has terminated, every data file it listed was
@@ -319,7 +299,7 @@ final class ReplayLoop(
     */
   def drainResolvedFilenameMarkers(): Unit = if (resolvedFromFilenames) {
     safeMarkerFence().foreach { target =>
-      mergeToFence(target, batchId = -1L, Seq("drain=resolved-markers"))
+      mergeToFence(target, batchId = -1L, Seq("drain=resolved-markers"), staged = false)
     }
   }
 
@@ -596,20 +576,6 @@ object ReplayLoop {
       false
     })
 
-  /** Distinct source files of a batch — cheap: file-name column only.
-    * Feeds both the lineage record and the batch identity key; shared by
-    * the single- and multi-table loops.
-    */
-  def distinctFiles(lines: org.apache.spark.sql.DataFrame): Seq[String] =
-    lines
-      .select(org.apache.spark.sql.functions.col(graft.feed.Changefeed.SRC_FILE).as("f"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .filter(_.nonEmpty)
-      .sorted
-      .toSeq
-
   /** Deterministic 64-bit identity of a batch's source-file set: SHA-256 of
     * the sorted file names, folded to a Long. Stable across checkpoint
     * wipes and engine batch renumbering; collision odds are negligible at
@@ -631,14 +597,25 @@ object ReplayLoop {
   /** mtime (millis) of a feed file as named by `input_file_name()` —
     * tolerates the `file:`/`file://` scheme prefix; None if unreadable.
     */
-  def fileMtimeMillis(name: String): Option[Long] = {
-    val path = name.stripPrefix("file://").stripPrefix("file:")
+  def fileMtimeMillis(name: String): Option[Long] =
     try Some(
       java.nio.file.Files
-        .getLastModifiedTime(java.nio.file.Paths.get(path))
+        .getLastModifiedTime(java.nio.file.Paths.get(normalizePath(name)))
         .toMillis
     )
     catch { case _: Exception => None }
+
+  /** Every regular file in the feed tree, depth 2 (top level plus chunk
+    * subdirectories). Driver-side metadata listing only.
+    */
+  private def feedFiles(feedDir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get(feedDir)
+    if (!java.nio.file.Files.exists(dir)) Nil
+    else
+      scala.util.Using.resource(java.nio.file.Files.walk(dir, 2)) {
+        _.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      }
   }
 
   /** File cap for one trigger: `maxFilesPerTrigger`, tightened by the byte
@@ -655,18 +632,7 @@ object ReplayLoop {
   ): Int = maxBytesPerTrigger match {
     case None => maxFilesPerTrigger
     case Some(budget) =>
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(feedDir)
-      val sizes =
-        if (!java.nio.file.Files.exists(dir)) Nil
-        else
-          scala.util.Using.resource(java.nio.file.Files.walk(dir, 2)) {
-            _.iterator().asScala
-              .filter(p => java.nio.file.Files.isRegularFile(p))
-              .take(256)
-              .map(java.nio.file.Files.size)
-              .toSeq
-          }
+      val sizes = feedFiles(feedDir).take(256).map(java.nio.file.Files.size)
       if (sizes.isEmpty) maxFilesPerTrigger
       else {
         val mean = math.max(1L, sizes.sum / sizes.size)
@@ -679,49 +645,56 @@ object ReplayLoop {
   * mutations, its source-file set, its identity key and its newest
   * in-stream resolved marker.
   *
-  * The lines are NOT cached: they feed three passes (staging append,
-  * resolved scan, file set), but re-scanning raw text from the page cache
-  * with the single-from_json parse is measurably cheaper than building a
-  * multi-GB columnar cache of the lines (which also made concurrent
-  * cache-builder tasks the peak-heap hotspot). input_file_name() is
-  * captured per scan, so every pass sees the same file column.
+  * The lines are NOT cached: they feed two passes (the resolved scan with
+  * the file set observed on it, then the staging append), but re-scanning
+  * raw text from the page cache with the single-from_json parse is
+  * measurably cheaper than building a multi-GB columnar cache of the lines
+  * (which also made concurrent cache-builder tasks the peak-heap hotspot).
+  * input_file_name() is captured per scan, so every pass sees the same
+  * file column.
   */
-private[loop] final case class BatchPrelude(
+private[graft] final case class BatchPrelude(
     mutations: DataFrame,
     files: Seq[String],
     stageKey: Long,
     resolved: Option[Hlc]
 )
 
-private[loop] object BatchPrelude {
+private[graft] object BatchPrelude {
   def apply(linesRaw: DataFrame, batchId: Long, parse: DataFrame => DataFrame): BatchPrelude = {
     val lines = linesRaw.select(col("value"), input_file_name().as(Changefeed.SRC_FILE))
+    // ONE pass before staging, one job with no Exchange: the file set is
+    // observed on every line, below the filter that keeps only lines
+    // containing a resolved marker (every supported envelope spells its
+    // marker with a "resolved" key), and the newest marker is a top-1 over
+    // those. The top-1 reads every partition, so the observation sees
+    // every line. Observation names match globally on the listener bus,
+    // hence the UUID.
+    val fileSet = org.apache.spark.sql.Observation(s"prelude-$batchId-${java.util.UUID.randomUUID()}")
+    val newest = parse(
+      lines
+        .observe(fileSet, collect_set(col(Changefeed.SRC_FILE)).as("files"))
+        .filter(col("value").contains("\"resolved\""))
+    ).filter(col(Changefeed.RESOLVED))
+      .orderBy(col(Changefeed.NANOS).desc, col(Changefeed.LOGICAL).desc)
+      .limit(1)
+      .select(Changefeed.NANOS, Changefeed.LOGICAL)
+      .collect()
+      .headOption
+      .map(r => Hlc(r.getLong(0), r.getInt(1)))
     // Identify the batch by its SOURCE FILE SET, not the engine's batch id:
     // after a wiped checkpoint the file source renumbers batches from 0,
     // and an id-keyed marker would wrongly skip a brand-new batch that
     // happens to reuse an old id. The file-set hash is stable under
     // renumbering AND still dedups true redeliveries of the same files.
-    val files = ReplayLoop.distinctFiles(lines)
+    val files = fileSet.get("files").asInstanceOf[collection.Seq[String]]
+      .filter(_.nonEmpty).sorted.toSeq
     // fall back to the engine batch id when the batch has no file
     // provenance (in-memory DataFrames via the public processBatch):
     // hashing an empty file set would collapse EVERY such batch onto one
     // constant key and silently skip all but the first
     val stageKey = if (files.isEmpty) batchId else ReplayLoop.batchKeyOf(files)
-    // cheap second scan: only lines containing a resolved marker are parsed
-    // (every supported envelope spells its marker with a "resolved" key)
-    val newest = parse(lines.filter(col("value").contains("\"resolved\"")))
-      .filter(col(Changefeed.RESOLVED))
-      .agg(max(struct(col("nanos"), col("logical"))))
-      .collect()
-      .headOption
-      .filterNot(_.isNullAt(0))
-      .map(_.getStruct(0))
-    BatchPrelude(
-      parse(lines).filter(!col(Changefeed.RESOLVED)),
-      files,
-      stageKey,
-      newest.map(r => Hlc(r.getLong(0), r.getInt(1)))
-    )
+    BatchPrelude(parse(lines).filter(!col(Changefeed.RESOLVED)), files, stageKey, newest)
   }
 }
 
@@ -740,7 +713,6 @@ private[loop] final class Applier(
 
   /** Merge the staged window up to `target` and commit the fence, then
     * publish the changelog, retire staging below the fence and vacuum.
-    * A no-op unless `target` is past the committed fence.
     *
     * The window is `(committed fence, target]` PLUS anything staged since
     * the last merge regardless of ts: a mutation below an already-committed
@@ -752,24 +724,34 @@ private[loop] final class Applier(
     * max_by anyway. Not cached: the window feeds exactly one consumer, the
     * merge, and the field set was recorded while staging, so planning
     * runs no summary scan.
+    *
+    * A `target` at or below the committed fence (a redelivered feed) still
+    * applies the late branch when this batch `staged` rows: window
+    * `(fence, fence]` plus the stage-seq branch, idempotence key
+    * `late-<seq>`, the fence left where it is — so the rows are merged and
+    * retired instead of sitting in staging until a newer fence. A batch
+    * that staged nothing commits nothing.
     */
   def applyFence(
       target: Hlc,
       batchId: Long,
       lineage: Seq[String],
+      staged: Boolean,
       extraMetrics: Map[String, Long] = Map.empty
   ): Unit = {
     val fence = ReplayLoop.fenceOf(t.table)
-    if (target > fence) {
+    if (target > fence || staged) {
       val mergedThroughSeq =
         t.table.log.latest().flatMap(_.metric("merged_through_seq")).getOrElse(0L)
       val seqNow = t.stage.currentSeq() // this batch's append already happened
-      val window = t.stage.selectWindowRaw(fence, target, stagedAfterSeq = Some(mergedThroughSeq))
+      val (to, idempotenceKey) =
+        if (target > fence) (target, s"fence-${target.format}") else (fence, s"late-$seqNow")
+      val window = t.stage.selectWindowRaw(fence, to, stagedAfterSeq = Some(mergedThroughSeq))
       val applied =
         try {
           planMerge(
-            window, Some(t.stage.observedFields().toSeq), batchId, s"merge fence=${target.format}",
-            s"fence-${target.format}", target, lineage,
+            window, Some(t.stage.observedFields().toSeq), batchId, s"merge fence=${to.format}",
+            idempotenceKey, to, lineage,
             Map("merged_through_seq" -> seqNow) ++ extraMetrics)
           true
         } catch {
@@ -778,9 +760,9 @@ private[loop] final class Applier(
           // race skips housekeeping — the winner owns that fence's retire
           // and vacuum, and a loser retiring concurrently races the
           // winner's staging bookkeeping.
-          case e: Throwable if ReplayLoop.lostRace(e, ReplayLoop.fenceOf(t.table) >= target) =>
+          case e: Throwable if ReplayLoop.lostRace(e, ReplayLoop.fenceOf(t.table) >= to) =>
             println(
-              s"[graft] ${t.table.root}: fence ${target.format} already applied by a " +
+              s"[graft] ${t.table.root}: fence ${to.format} already applied by a " +
                 "concurrent writer (staged files retired mid-read); no-op"
             )
             false
@@ -789,7 +771,7 @@ private[loop] final class Applier(
         // changelog BEFORE vacuum: the new segment diffs against the
         // previous version's manifest, which vacuum may retire
         changelogDir.foreach(t.table.emitChangelog)
-        t.stage.retire(target)
+        t.stage.retire(to)
         vacuumKeepVersions.foreach(t.table.vacuum(_))
       }
     }
@@ -823,7 +805,7 @@ private[loop] final class Applier(
       lineage: Seq[String],
       extraMetrics: Map[String, Long]
   ): Unit = {
-    val spec = t.spec
+    val spec = t.currentSpec
     // pre-dedup only when a CAS gate needs one candidate per key; the
     // merge's per-key max_by reduction is the LWW otherwise (saves two
     // shuffles)

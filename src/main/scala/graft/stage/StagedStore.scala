@@ -57,8 +57,9 @@ final class StagedStore(
   /** Append a batch of parsed mutations
     * `(key, data, nanos, logical, src_file)` — the one-table call of
     * [[StagedStore.appendTopics]]. `batchId` makes replays cheap no-ops (a
-    * marker is written after a successful append); returns false for such
-    * a replay.
+    * marker is written after a successful append). Returns whether rows
+    * were staged: false for such a replay and for a batch without
+    * mutations.
     *
     * `validatePk = Some((arity, payloadPkNames))` checks key arity and PK
     * presence; a PK-less spec (synthetic rowid) passes None and only has
@@ -71,6 +72,7 @@ final class StagedStore(
   ): Boolean = {
     val one = DriftSummary.OneTable
     stageTopics(mutations, lit(one), batchId, Map(one -> this), validatePk.map(one -> _).toMap)
+      .nonEmpty
   }
 
   /** Fold `fields` into the compacted field-set file (read-union-write,
@@ -307,14 +309,15 @@ object StagedStore {
     * @param validatePk topic -> (key arity, payload PK names); topics
     *   absent from it (PK-less specs synthesize a rowid at plan time) only
     *   have their field sets recorded
-    * @return false when every store had already staged `batchId`
+    * @return the topics this call staged rows for: none when every store
+    *   had already staged `batchId`
     */
   def appendTopics(
       mutations: DataFrame,
       batchId: Long,
       stores: Map[String, StagedStore],
       validatePk: Map[String, (Int, Seq[String])]
-  ): Boolean =
+  ): Set[String] =
     stageTopics(mutations, col(TOPIC), batchId, stores, validatePk)
 
   /** [[appendTopics]] with the routing column given as `topic`: a literal
@@ -327,16 +330,19 @@ object StagedStore {
       batchId: Long,
       stores: Map[String, StagedStore],
       validatePk: Map[String, (Int, Seq[String])]
-  ): Boolean = {
+  ): Set[String] = {
     val pending = stores.toSeq.sortBy(_._1).filterNot { case (_, st) =>
       Files.exists(st.marker(batchId))
     }
-    if (pending.isEmpty) return false
-    // per-store values folded into single columns (constant for one table)
+    if (pending.isEmpty) return Set.empty
+    // per-store values folded into single columns; one store's value is
+    // used as is
     def perStore(f: ((String, StagedStore), Int) => Column): Column =
-      pending.zipWithIndex.foldLeft(lit(null)) { case (acc, (ts, i)) =>
-        when(topic === ts._1, f(ts, i)).otherwise(acc)
-      }
+      if (pending.size == 1) f(pending.head, 0)
+      else
+        pending.zipWithIndex.foldLeft(lit(null)) { case (acc, (ts, i)) =>
+          when(topic === ts._1, f(ts, i)).otherwise(acc)
+        }
     val seqs = pending.map { case (_, st) => st.currentSeq() + 1 }
     val multi = pending.size > 1
     val obs = org.apache.spark.sql.Observation(
@@ -380,8 +386,9 @@ object StagedStore {
         st.recordFields(summary.get(t).map(_.fields.toSeq).getOrElse(Nil))
         Files.writeString(st.marker(batchId), s"""{"seq":${seqs(i)}}""")
       }
+      // a topic is in the summary iff it staged a row
+      pending.map(_._1).filter(summary.contains).toSet
     } finally deleteRecursively(scratch)
-    true
   }
 
   /** Move the parquet files of every `ts_bucket=N` dir under `from` into

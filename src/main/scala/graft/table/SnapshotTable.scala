@@ -592,17 +592,58 @@ final class SnapshotTable(
     val prevDeltaSchemas: Map[String, String] =
       prev.flatMap(m => Option(m.deltaSchemas)).getOrElse(Map.empty)
 
+    val prevFence = prev.map(_.resolved).getOrElse(Hlc.Zero)
+    // the fence never regresses (a replayed old window can merge — its rows
+    // no-op against newer LWW state — but must not move the fence backward,
+    // mirroring the reference's monotonic Mark, resolver.go:154-157)
+    val fenceOut = if (resolved > prevFence) resolved else prevFence
+
+    // Tombstone GC horizon: the newest fence strictly OLDER than the
+    // previous one (one fence generation of lag). The replay loop tolerates
+    // transport-reordered deliveries below the committed fence (file sources
+    // order by mtime), so a tombstone must outlive its own fence by at least
+    // one generation — otherwise delete@t2 could be GC'd and a late
+    // upsert@t1 (t1<t2) would resurrect the deleted key. Every commit
+    // records that fence for its successor: commits that keep the fence
+    // (late applies of a redelivered batch, immediate mode) would
+    // otherwise push it out of the commits vacuum retains, and a horizon
+    // lost that way turns the intake bound below off. A commit without the
+    // record (written before it existed) walks back over the retained
+    // commits instead.
+    val gcHorizon: Hlc = prev
+      .map { p =>
+        (p.metric("prior_fence_nanos"), p.metric("prior_fence_logical")) match {
+          case (Some(n), Some(l)) => Hlc(n, l.toInt)
+          case _ =>
+            var v = p.version - 1
+            var h = Hlc.Zero
+            var continue = true
+            while (continue && v >= 1) {
+              log.tryRead(v) match {
+                case Some(m) if m.resolved < prevFence =>
+                  h = m.resolved; continue = false
+                case Some(_) => v -= 1
+                case None => continue = false // vacuumed past: keep tombstones
+              }
+            }
+            h
+        }
+      }
+      .getOrElse(Hlc.Zero)
+    // this commit's record: the newest fence strictly older than `fenceOut`
+    val priorFence = if (fenceOut > prevFence) prevFence else gcHorizon
+    val fenceMetrics =
+      Map("prior_fence_nanos" -> priorFence.nanos, "prior_fence_logical" -> priorFence.logical.toLong)
+
     if (touched.isEmpty) {
       bucketed.unpersist()
       // empty batch: still record the fence advance as a metadata-only commit
       val version = prev.map(_.version + 1).getOrElse(1L)
-      val pf = prev.map(_.resolved).getOrElse(Hlc.Zero)
-      val fo = if (resolved > pf) resolved else pf
       val meta = CommitMeta(
         version = version,
         idempotenceKey = idempotenceKey,
-        resolvedNanos = fo.nanos,
-        resolvedLogical = fo.logical,
+        resolvedNanos = fenceOut.nanos,
+        resolvedLogical = fenceOut.logical,
         schemaDdl = evolved.toDDL,
         numBuckets = numBuckets,
         buckets = prev.map(_.buckets).getOrElse(Map.empty),
@@ -610,7 +651,7 @@ final class SnapshotTable(
         deltas = prevDeltas,
         deltaSchemas = prevDeltaSchemas,
         pkCols = pkCols,
-        metrics = Map("rows_written" -> 0L, "touched_buckets" -> 0L) ++ extraMetrics,
+        metrics = Map("rows_written" -> 0L, "touched_buckets" -> 0L) ++ fenceMetrics ++ extraMetrics,
         partitionMetrics = Map.empty,
         lineage = lineage,
         committedAtMs = System.currentTimeMillis()
@@ -636,36 +677,6 @@ final class SnapshotTable(
     val current =
       if (deltaMode) None
       else Some(alignTo(readRaw(Some(touched)), target))
-
-    val prevFence = prev.map(_.resolved).getOrElse(Hlc.Zero)
-    // the fence never regresses (a replayed old window can merge — its rows
-    // no-op against newer LWW state — but must not move the fence backward,
-    // mirroring the reference's monotonic Mark, resolver.go:154-157)
-    val fenceOut = if (resolved > prevFence) resolved else prevFence
-
-    // Tombstone GC horizon: the newest fence strictly OLDER than the
-    // previous one (one fence generation of lag). The replay loop tolerates
-    // transport-reordered deliveries below the committed fence (file sources
-    // order by mtime), so a tombstone must outlive its own fence by at least
-    // one generation — otherwise delete@t2 could be GC'd and a late
-    // upsert@t1 (t1<t2) would resurrect the deleted key. Walking back over
-    // the retained commits is bounded by the vacuum window.
-    val gcHorizon: Hlc = prev
-      .map { p =>
-        var v = p.version - 1
-        var h = Hlc.Zero
-        var continue = true
-        while (continue && v >= 1) {
-          log.tryRead(v) match {
-            case Some(m) if m.resolved < prevFence =>
-              h = m.resolved; continue = false
-            case Some(_) => v -= 1
-            case None => continue = false // vacuumed past: keep tombstones
-          }
-        }
-        h
-      }
-      .getOrElse(Hlc.Zero)
 
     val hlcTuple = struct(col(NANOS), col(LOGICAL))
     // ONE shuffle serves both the per-key LWW fold and the (bucket, salt)
@@ -849,7 +860,7 @@ final class SnapshotTable(
         "touched_buckets" -> touched.size.toLong,
         "delta_merge" -> (if (deltaMode) 1L else 0L),
         "dropped_late" -> droppedLate
-      ) ++ extraMetrics,
+      ) ++ fenceMetrics ++ extraMetrics,
       partitionMetrics =
         perBucket.map { case (b, n) => b.toString -> n }.toMap,
       lineage = lineage,

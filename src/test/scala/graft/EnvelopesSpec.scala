@@ -120,21 +120,74 @@ class EnvelopesSpec extends SparkSpec {
     assert(res == Seq((15L, 2)))
   }
 
+  test("golden: one logical feed in every envelope parses to the same unified rows") {
+    // upsert, delete, a stamp without a `.logical` part, a second upsert and
+    // a resolved marker, plus a blank and a garbage line in every rendering
+    val rows = Seq(
+      ("a", """{"pk":"a","v":1}""", "10.0000000001", "insert"),
+      ("b", """{"pk":"b","v":null}""", "11", "delete"),
+      ("c", """{"pk":"c","v":"x"}""", "12.0000000000", "update")
+    )
+    val marker = "15.0000000002"
+    val noise = Seq("", "not json {")
+    def isDelete(event: String) = event == "delete"
+    def changefeed(withTopic: Boolean) = rows.map { case (pk, data, stamp, event) =>
+      val after = if (isDelete(event)) "null" else data
+      val topic = if (withTopic) ""","topic":"t"""" else ""
+      s"""{"after":$after,"key":["$pk"]$topic,"updated":"$stamp"}"""
+    }
+    val queryRows = rows.map { case (_, data, stamp, event) =>
+      data.stripSuffix("}") + s""","__event__":"$event","__crdb__":{"updated":"$stamp"}}"""
+    }
+    def webhook(payload: Seq[String]) =
+      s"""{"payload":[${payload.mkString(",")}],"length":${payload.size}}"""
+    val queryMarker = s"""{"__crdb__":{"resolved":"$marker"}}"""
+    val ndjson = changefeed(withTopic = false) :+ s"""{"resolved":"$marker"}"""
+    val hook = Seq(webhook(changefeed(withTopic = true)), s"""{"resolved":"$marker"}""")
+    val query = queryRows :+ queryMarker
+    val hookQuery = Seq(webhook(queryRows), queryMarker)
+    def df(lines: Seq[String]) = (lines ++ noise).toDF("value")
+
+    val expected = Seq(
+      (Some("""["a"]"""), Some("""{"pk":"a","v":1}"""), 10L, 1, false),
+      (Some("""["b"]"""), None, 11L, 0, false),
+      (Some("""["c"]"""), Some("""{"pk":"c","v":"x"}"""), 12L, 0, false),
+      (None, None, 15L, 2, true)
+    )
+    def unified(parsed: org.apache.spark.sql.DataFrame) =
+      parsed
+        .select("key", "data", "nanos", "logical", "is_resolved")
+        .as[(Option[String], Option[String], Long, Int, Boolean)]
+        .collect()
+        .toSeq
+        .sortBy(r => (r._3, r._4))
+    def topics(parsed: org.apache.spark.sql.DataFrame) =
+      parsed.orderBy("nanos").select("topic").as[Option[String]].collect().toSeq
+    val topicFile = df(hookQuery).withColumn(Changefeed.SRC_FILE, lit("/feed/topic=t/0001.json"))
+    val byTopic = Envelopes.parseWebhookQueryTopicLines(topicFile, Map("t" -> Seq("pk")))
+    val parsedAll = Seq(
+      "ndjson" -> Changefeed.parseLines(df(ndjson), withFile = false),
+      "webhook" -> Envelopes.parseWebhookLines(df(hook), withFile = false),
+      "query" -> Envelopes.parseQueryLines(df(query), Seq("pk"), withFile = false),
+      "webhook-query" -> Envelopes.parseWebhookQueryLines(df(hookQuery), Seq("pk"), withFile = false),
+      "webhook-query-topic" -> byTopic
+    )
+    parsedAll.foreach { case (name, parsed) =>
+      assert(unified(parsed) == expected, name)
+    }
+    val someT = Seq(Some("t"), Some("t"), Some("t"), None)
+    assert(topics(parsedAll(1)._2) == someT)
+    assert(topics(byTopic) == someT)
+    assert(byTopic.select(Changefeed.SRC_FILE).as[String].collect().toSet ==
+      Set("/feed/topic=t/0001.json"))
+  }
+
   test("resolved filename timestamp parse (33 digits)") {
     // 2023-11-14 22:13:20 UTC = epoch 1700000000
     val name = "20231114221320" + "123456789" + "0000000042" + ".RESOLVED"
     val got = Envelopes.parseResolvedFilename(name)
     assert(got.contains(Hlc(1700000000123456789L, 42)))
     assert(Envelopes.parseResolvedFilename("junk.RESOLVED").isEmpty)
-
-    // column variant agrees
-    val viaCol = Seq(name)
-      .toDF("f")
-      .select(Envelopes.resolvedFilenameCol(col("f")).as("r"))
-      .select("r.nanos", "r.logical")
-      .as[(Long, Int)]
-      .head()
-    assert(viaCol == ((1700000000123456789L, 42)))
   }
 
   test("FK levels: layered order, parallel-safe within level, cycle error") {

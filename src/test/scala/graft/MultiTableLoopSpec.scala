@@ -415,7 +415,7 @@ class MultiTableLoopSpec extends SparkSpec {
       ("t2", "[7]", """{"pk":7,"w":9}""", 50L, 0, "f")
     ).toDF("topic", "key", "data", "nanos", "logical", "src_file")
 
-    StagedStore.appendTopics(muts, batchId = 1L, stores, validate)
+    assert(StagedStore.appendTopics(muts, batchId = 1L, stores, validate) == Set("t1", "t2"))
     // rows landed in the right stores and ts buckets; seq stamped per store
     val r1 = t1.readAll().orderBy("nanos")
     assert(r1.count() == 2)
@@ -428,14 +428,14 @@ class MultiTableLoopSpec extends SparkSpec {
     assert(t2.observedFields() == Set("pk", "w"))
 
     // replay of the same batch id is a no-op (markers)
-    StagedStore.appendTopics(muts, batchId = 1L, stores, validate)
+    assert(StagedStore.appendTopics(muts, batchId = 1L, stores, validate).isEmpty)
     assert(t1.readAll().count() == 2 && t2.readAll().count() == 1)
     assert(t1.currentSeq() == 1L)
 
     // a second batch bumps seq and appends
     val muts2 = Seq(("t1", "[3]", """{"pk":3,"v":"c"}""", 60L, 0, "f"))
       .toDF("topic", "key", "data", "nanos", "logical", "src_file")
-    StagedStore.appendTopics(muts2, batchId = 2L, stores, validate)
+    assert(StagedStore.appendTopics(muts2, batchId = 2L, stores, validate) == Set("t1"))
     assert(t1.currentSeq() == 2L)
     assert(t1.readAll().count() == 3)
     // t2 had no rows in batch 2 but gets its marker (replay-safe) anyway
@@ -452,5 +452,35 @@ class MultiTableLoopSpec extends SparkSpec {
     // the rejected batch staged nothing
     assert(t2.readAll().count() == 1 && t2.currentSeq() == seqBefore)
     assert(t1.readAll().count() == 3)
+  }
+
+  test("fence 2 of an evolved topic runs as many jobs as fence 2 of a topic that never evolved") {
+    // one single-topic loop per topic, so their jobs never interleave; the
+    // "evo" payloads carry a column the declared spec lacks
+    val schema = StructType(Seq(StructField("pk", IntegerType), StructField("v", StringType)))
+    def fenceJobs(topic: String, extra: String): Seq[Int] = {
+      val base = tmpDir(s"mtl-evo-$topic")
+      val t = TableTarget(
+        TableSpec(schema, Seq("pk")),
+        new SnapshotTable(spark, s"$base/table", numBuckets = 4),
+        new StagedStore(spark, s"$base/stage", bucketNanos = 100L))
+      val loop = new MultiTableLoop(spark, s"$base/feed", Map(topic -> t), Map.empty,
+        s"$base/checkpoint", saltBuckets = 4)
+      def body(fence: Int) = {
+        val muts = (1 to 5).map { pk =>
+          val ts = fence * 100 + pk
+          s"""{"after":{"pk":$pk,"v":"f$fence"$extra},"key":[$pk],"topic":"$topic","updated":"$ts.0000000000"}"""
+        }
+        Seq(s"""{"payload":[${muts.mkString(",")}],"length":5}""",
+          s"""{"resolved":"${fence * 100 + 50}.0000000000"}""")
+      }
+      val jobs = (1 to 2).map(f => jobShape(loop.processBatch(body(f).toDF("value"), f))._1)
+      assert(loop.committedFence == Hlc(250L, 0))
+      jobs
+    }
+    val evolved = fenceJobs("evo", extra = ""","stars":7""")
+    val plain = fenceJobs("plain", extra = "")
+    assert(evolved(0) > plain(0), s"fence 1 evolves the schema: $evolved vs $plain")
+    assert(evolved(1) == plain(1), s"fence 2 must not infer again: $evolved vs $plain")
   }
 }

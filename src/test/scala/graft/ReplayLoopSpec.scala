@@ -178,6 +178,34 @@ class ReplayLoopSpec extends SparkSpec {
     assert(loop2.committedFence > fence1)
   }
 
+  test("a redelivered, fully applied feed is merged late and retired, not left staged") {
+    val feedDir = tmpDir("feedredeliver")
+    val base = tmpDir("e2eredeliver")
+    Generator.writeFeed(spark, feedSpec, feedDir, parallelism = 4)
+    val (loop, table) = newLoop(feedDir, base)
+    loop.runAvailableNow()
+    val fence = loop.committedFence
+    val state = tableState(table)
+    assert(state == expectedState(feedSpec))
+
+    // the same lines under new file names, delivered as one batch whose
+    // markers are all at or below the committed fence
+    val copy = Paths.get(tmpDir("redelivered"))
+    Files.walk(Paths.get(feedDir)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.matches("^[._].*"))
+      .zipWithIndex
+      .foreach { case (p, i) => Files.copy(p, copy.resolve(s"$i-${p.getFileName}")) }
+    loop.processBatch(spark.read.text(copy.toString), batchId = 1000L)
+
+    assert(loop.committedFence == fence)
+    assert(tableState(table) == state)
+    assert(table.log.all().exists(_.idempotenceKey.startsWith("late-")))
+    val stage = loop.stage
+    val belowFenceBucket =
+      stage.readAll().filter(col(StagedStore.TS_BUCKET) < stage.bucketOfNanos(fence.nanos))
+    assert(belowFenceBucket.count() == 0, "redelivered rows must be retired")
+  }
+
   test("bounded re-merge window: applied rows stop rewriting; late below-fence rows still apply") {
     val feedDir = tmpDir("feed3")
     Files.createDirectories(Paths.get(feedDir, "chunk=000000"))

@@ -104,6 +104,25 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!t.read().select("repo").as[String].collect().contains("r1"))
   }
 
+  test("commits that keep the fence, vacuumed, keep the intake bound") {
+    val t = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 1)
+    t.merge(batch(Seq(("r1", "a", "v1", 10L, 0, false))), pk, "k1", Hlc(10, 0))
+    t.merge(batch(Seq(("r1", "a", null, 20L, 0, true))), pk, "k2", Hlc(20, 0))
+    t.merge(batch(Seq(("r2", "b", "v", 30L, 0, false))), pk, "k3", Hlc(30, 0))
+    // fence 40 GCs the tombstone@20
+    t.merge(batch(Seq(("r3", "c", "v", 40L, 0, false))), pk, "k4", Hlc(40, 0))
+    // late applies of redelivered rows: same fence, vacuumed after each,
+    // until no retained commit carries a fence older than 40
+    (1 to 3).foreach { i =>
+      t.merge(batch(Seq(("r3", "c", "v", 40L, 0, false))), pk, s"late-$i", Hlc(40, 0))
+      t.vacuum(keepVersions = 2)
+    }
+    // the gc horizon is still 30: the upsert@15 is dropped, not merged
+    val m = t.merge(batch(Seq(("r1", "a", "ghost", 15L, 0, false))), pk, "late-4", Hlc(40, 0)).get
+    assert(m.metric("dropped_late").contains(1L))
+    assert(!t.read().select("repo").as[String].collect().contains("r1"))
+  }
+
   test("merge-on-read reads are bucket-local: delta-free buckets read with no shuffle") {
     val t = new SnapshotTable(spark, tmpDir("morlocal"), numBuckets = 8, compactEvery = 4)
     t.merge(batch((0 until 64).map(i => (s"r$i", "p", "v1", 10L, 0, false))), pk, "k1", Hlc(10, 0))

@@ -10,6 +10,38 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started by `f`, and the physical plans it executed. */
+  def jobShape(f: => Unit): (Int, Seq[String]) = {
+    import org.apache.spark.GraftListenerBusAccess.waitUntilEmpty
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan.toString)
+    }
+    waitUntilEmpty(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      f
+      waitUntilEmpty(sc)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    import scala.jdk.CollectionConverters._
+    (jobs.get, plans.asScala.toSeq)
+  }
 }
 
 object SparkSpec {
