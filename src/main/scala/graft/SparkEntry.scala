@@ -162,7 +162,7 @@ object SparkEntry {
         .filter(col("event_id") % 2 === 1)
         .withColumn("__deleted", lit(false))
       // single-pass audit over the SAME gate predicate as casFilter
-      // (ApplyPlanner.casJoined/casCond are shared by both): the former
+      // (SnapshotTable.casJoined/casCond are shared by both): the former
       // count-accepted-then-join-back shape scanned `proposed` twice and
       // paid an extra aggregate + join for the per-key accounting
       ApplyPlanner

@@ -422,105 +422,15 @@ object ApplyPlanner {
     PlanResult(deduped, finalSchema, fields, spec.pkCols)
   }
 
-  /** Compare-and-set gate against the current table rows: keep an incoming
-    * row iff there is no current row for its key, or its CAS tuple is
-    * strictly greater than the current row's. Deletes pass unconditionally
-    * (the reference's delete path has no CAS — queries/delete.tmpl).
-    * Mirrors queries/conditional.tmpl:48-75.
-    *
-    * The current-row read is pruned to the batch's touched buckets — at
-    * scale an unpruned read is a full-table scan per fence. The batch
-    * is cached for the two passes (bucket discovery + join); call the
-    * returned `cleanup` after the merge has consumed the result.
-    */
-  def casGate(
-      table: graft.table.SnapshotTable,
-      batch: DataFrame,
-      pkCols: Seq[String],
-      casColumns: Seq[String]
-  ): (DataFrame, () => Unit) = {
-    // no current rows to compare against (empty table), or the committed
-    // schema predates the CAS/PK columns (they arrive with this very
-    // batch): every incoming row passes, same as the left-join-miss path
-    val committed = table.payloadSchema().map(_.fieldNames.toSet)
-    val gateable = committed.exists(f => (pkCols ++ casColumns).forall(f.contains))
-    if (casColumns.isEmpty || !gateable) (batch, () => ())
-    else {
-      val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val touched: Set[Int] = cached
-        .select(
-          pmod(xxhash64(pkCols.map(col): _*), lit(table.numBuckets))
-            .cast(IntegerType)
-            .as("b")
-        )
-        .distinct()
-        .collect()
-        .map(_.getInt(0))
-        .toSet
-      val gated = casFilter(
-        cached,
-        // readCurrent: exactly one (max-HLC) row per key even when the
-        // table carries merge-on-read deltas
-        table.readCurrent(Some(touched)).filter(!col(SnapshotTable.DELETED)),
-        pkCols,
-        casColumns
-      )
-      (gated, () => { cached.unpersist(); () })
-    }
-  }
-
-  def casFilter(
-      batch: DataFrame,
-      current: DataFrame,
-      pkCols: Seq[String],
-      casColumns: Seq[String]
-  ): DataFrame = {
-    if (casColumns.isEmpty) return batch
-    casJoined(batch, current, pkCols, casColumns)
-      .filter(casCond(casColumns))
-      .drop((casColumns.map(c => s"__cur_$c") :+ "__cur_exists"): _*)
-  }
-
-  /** The left join of a batch against current rows that both the CAS filter
-    * and the CAS audit gate on — ONE definition so they cannot drift.
-    * Precondition (shared with [[casFilter]]): `current` has at most one
-    * row per key.
-    */
-  private def casJoined(
-      batch: DataFrame,
-      current: DataFrame,
-      pkCols: Seq[String],
-      casColumns: Seq[String]
-  ): DataFrame = {
-    val curProj = current.select(
-      (pkCols.map(col) ++
-        casColumns.map(c => col(c).as(s"__cur_$c")) :+
-        lit(true).as("__cur_exists")): _*
-    )
-    batch.join(curProj, pkCols, "left")
-  }
-
-  /** The gate predicate over [[casJoined]] output: row passes iff it is a
-    * delete, has no current row, or its CAS tuple strictly beats the
-    * current one.
-    */
-  private def casCond(casColumns: Seq[String]): Column = {
-    val proposed = struct(casColumns.map(col): _*)
-    val curTuple = struct(casColumns.map(c => col(s"__cur_$c")): _*)
-    col(SnapshotTable.DELETED) ||
-      col("__cur_exists").isNull ||
-      proposed > curTuple
-  }
-
   /** Per-key CAS acceptance accounting: `(pkCols..., n_proposed,
     * n_accepted)` for every key with at least one batch row, over exactly
-    * the same join and gate predicate as [[casFilter]] (shared
-    * [[casJoined]]/[[casCond]] builders — the filter and the audit cannot
-    * disagree). ONE pass: the former audit shape at the q_cas_gate call
-    * site aggregated the batch a second time for `n_proposed` and joined
-    * the two counts back together — an extra batch scan, an extra
-    * aggregate, and an extra join per audit, all folded into this single
-    * aggregation over the join output (the left join against the ≤1-per-key
+    * the same join and gate predicate as [[SnapshotTable.casFilter]], which
+    * the merge applies (shared `casJoined`/`casCond` builders — the filter
+    * and the audit cannot disagree). ONE pass: the former audit shape at
+    * the q_cas_gate call site aggregated the batch a second time for
+    * `n_proposed` and joined the two counts back together — an extra batch
+    * scan, an extra aggregate, and an extra join per audit, all folded into
+    * this single aggregation over the join output (the left join against the ≤1-per-key
     * `current` preserves batch cardinality, so `count(*)` IS `n_proposed`).
     */
   def casAudit(
@@ -530,12 +440,12 @@ object ApplyPlanner {
       casColumns: Seq[String]
   ): DataFrame = {
     require(casColumns.nonEmpty, "casAudit needs CAS columns")
-    casJoined(batch, current, pkCols, casColumns)
+    SnapshotTable.casJoined(batch, current, pkCols, casColumns)
       .groupBy(pkCols.map(col): _*)
       .agg(
         count(lit(1)).as("n_proposed"),
         coalesce(
-          sum(when(casCond(casColumns), 1L).otherwise(0L)),
+          sum(when(SnapshotTable.casCond(casColumns), 1L).otherwise(0L)),
           lit(0L)
         ).as("n_accepted")
       )

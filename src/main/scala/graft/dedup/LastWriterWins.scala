@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -86,11 +86,4 @@ object LastWriterWins {
       )
     phase2.select(cols.map(c => col(s"__row.$c").as(c)): _*)
   }
-
-  /** LWW as a merge of a new batch *against current table rows*: given rows
-    * carrying `(keyCols, tsCols)` from both sides, keep per key the row with
-    * max ts. Used by the snapshot merge so replayed / out-of-order batches
-    * converge (the table itself is the other "writer").
-    */
-  def tsTuple(tsCols: Seq[String]): Column = struct(tsCols.map(col): _*)
 }

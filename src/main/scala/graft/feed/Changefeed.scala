@@ -160,6 +160,4 @@ object Changefeed {
       )
     )
   }
-
-  def formatLines(feed: DataFrame): DataFrame = feed.select(lineCol.as("value"))
 }

@@ -28,12 +28,12 @@ import graft.table.SnapshotTable
   *      reference's `Mark` (resolver.go:154-157);
   *   4. if the fence advanced: read staged mutations in
   *      `(committedFence, newFence]` (partition-pruned), run the apply
-  *      planner (drift checks → transforms → salted LWW dedup), CAS-gate
-  *      against current rows if configured, and MERGE into the snapshot
-  *      with idempotence key = the fence — replays of the same window
-  *      no-op; a batch whose markers are all at or below the fence but
-  *      which staged rows (a redelivery) merges those rows under the
-  *      unchanged fence;
+  *      planner (drift checks → transforms → salted LWW dedup) and MERGE
+  *      into the snapshot (CAS-gated against the current rows inside the
+  *      merge attempt, if configured) with idempotence key = the fence —
+  *      replays of the same window no-op; a batch whose markers are all at
+  *      or below the fence but which staged rows (a redelivery) merges
+  *      those rows under the unchanged fence;
   *   5. retire staging partitions below the fence (metadata-only drop).
   * Steps 4-5 are the [[Applier]] that [[MultiTableLoop]] runs per table.
   *
@@ -792,7 +792,7 @@ private[loop] final class Applier(
     vacuumKeepVersions.foreach(t.table.vacuum(_))
   }
 
-  /** plan → CAS gate → merge → release the gate's cache, timed as the
+  /** plan → merge (CAS-gated inside each merge attempt), timed as the
     * `plan` and `mergePhase` phases of `batchId`.
     */
   private def planMerge(
@@ -813,11 +813,9 @@ private[loop] final class Applier(
       ApplyPlanner.plan(spark, spec, rows, saltBuckets,
         dedup = spec.config.casColumns.nonEmpty, observedFields = observedFields)
     }
-    val (gated, casCleanup) =
-      ApplyPlanner.casGate(t.table, planned.batch, planned.pkCols, spec.config.casColumns)
     ReplayLoop.timed(mergePhase, batchId) {
-      t.table.merge(gated, planned.pkCols, idempotenceKey, resolved, lineage, extraMetrics)
+      t.table.merge(planned.batch, planned.pkCols, idempotenceKey, resolved, lineage, extraMetrics,
+        spec.config.casColumns)
     }
-    casCleanup()
   }
 }

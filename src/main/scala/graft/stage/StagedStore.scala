@@ -75,11 +75,12 @@ final class StagedStore(
       .nonEmpty
   }
 
-  /** Fold `fields` into the compacted field-set file (read-union-write,
-    * atomic rename; single writer per store). Keeps [[observedFields]] an
-    * O(1) file read no matter how many batches have ever been staged.
+  /** Union of every payload field set ever staged (monotone — schemas only
+    * grow). ONE compacted-file read, independent of batch count: the
+    * per-batch markers exist only for append idempotence and are retired by
+    * [[retire]], so the field universe cannot live in them.
     */
-  private def readFieldsFile(): Set[String] = {
+  def observedFields(): Set[String] = {
     if (!Files.exists(fieldsFile)) return Set.empty
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -88,29 +89,12 @@ final class StagedStore(
     else f.elements().asScala.map(_.asText()).toSet
   }
 
-  /** Field sets recorded per-marker by the pre-compaction format. Folded in
-    * whenever the compacted file is first created so staged-but-unmerged
-    * pre-upgrade batches keep their field universe — the fold must run on
-    * the first WRITE, not only on the first read: the loop's own first
-    * append calls [[recordFields]] before any [[observedFields]] call, and
-    * creating `_fields` from the new batch alone would orphan the legacy
-    * sets forever.
+  /** Fold `fields` into the compacted field-set file (read-union-write,
+    * atomic rename; single writer per store). Keeps [[observedFields]] an
+    * O(1) file read no matter how many batches have ever been staged.
     */
-  private def legacyMarkerFields(): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    listDir(markerDir)
-      .flatMap { p =>
-        val f = mapper.readTree(Files.readString(p)).get("fields")
-        if (f == null) Nil else f.elements().asScala.map(_.asText()).toList
-      }
-      .toSet
-  }
-
   private def recordFields(fields: Seq[String]): Unit = {
-    val legacy =
-      if (!Files.exists(fieldsFile)) legacyMarkerFields() else Set.empty[String]
-    val merged = (readFieldsFile() ++ legacy ++ fields).toSeq.sorted
+    val merged = (observedFields() ++ fields).toSeq.sorted
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     val arr = node.putArray("fields")
@@ -125,21 +109,6 @@ final class StagedStore(
     )
   }
 
-  /** Union of every payload field set ever staged (monotone — schemas only
-    * grow). ONE compacted-file read, independent of batch count: the
-    * per-batch markers exist only for append idempotence and are retired by
-    * [[retire]], so the field universe cannot live in them.
-    */
-  def observedFields(): Set[String] = {
-    if (!Files.exists(fieldsFile)) {
-      // read-side half of the migration (see [[legacyMarkerFields]])
-      val legacy = legacyMarkerFields()
-      if (legacy.nonEmpty) recordFields(Nil)
-      return legacy
-    }
-    readFieldsFile()
-  }
-
   private def schema: StructType = StructType(
     Seq(
       StructField("key", StringType),
@@ -152,11 +121,7 @@ final class StagedStore(
   )
 
   private def readRaw(): DataFrame =
-    spark.read
-      .schema(schema.add(TS_BUCKET, LongType))
-      .parquet(dataDir)
-      // files written before the seq column existed read as null -> 0
-      .withColumn(SEQ, coalesce(col(SEQ), lit(0L)))
+    spark.read.schema(schema.add(TS_BUCKET, LongType)).parquet(dataDir)
 
   /** All currently staged mutations (deduplicated). */
   def readAll(): DataFrame =
@@ -242,20 +207,12 @@ final class StagedStore(
     // marker names are batch-identity hashes (not sequential); recency
     // comes from the store seq embedded in the marker CONTENT (exact and
     // monotone — file mtime alone mis-orders markers written within one
-    // coarse-granularity mtime tick). Legacy seq-less markers sort oldest,
-    // then by (mtime, name) for determinism.
+    // coarse-granularity mtime tick). A torn marker sorts oldest.
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def markerSeq(p: java.nio.file.Path): Long =
-      try {
-        val n = mapper.readTree(Files.readString(p)).get("seq")
-        if (n == null) Long.MinValue else n.asLong(Long.MinValue)
-      } catch { case _: Exception => Long.MinValue }
-    val markers = listDir(markerDir)
-      .map(p =>
-        (markerSeq(p), Files.getLastModifiedTime(p).toMillis, p.getFileName.toString, p)
-      )
-      .sortBy { case (s, t, n, _) => (s, t, n) }
-    markers.dropRight(markerKeep).foreach { case (_, _, _, p) => Files.deleteIfExists(p) }
+      try mapper.readTree(Files.readString(p)).path("seq").asLong(Long.MinValue)
+      catch { case _: java.io.IOException => Long.MinValue }
+    listDir(markerDir).sortBy(markerSeq).dropRight(markerKeep).foreach(Files.deleteIfExists)
     dropped
   }
 }

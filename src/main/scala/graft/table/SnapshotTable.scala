@@ -51,14 +51,6 @@ final class SnapshotTable(
     spark: SparkSession,
     val root: String,
     val numBuckets: Int = 64,
-    /** Write-task fan-out per touched bucket: the merge write repartitions by
-      * `(bucket, pk-hash % writersPerBucket)`, so a hot or very large bucket
-      * is rewritten by up to this many tasks/files instead of exactly one —
-      * the knob that decouples write parallelism from `numBuckets` at scale.
-      * A bucket directory with several part files is already the read path's
-      * normal case, and footer counts sum per-bucket across files.
-      */
-    val writersPerBucket: Int = 4,
     /** Merge-on-read compaction cadence. 1 (default) = pure copy-on-write:
       * every merge rewrites its touched buckets' full contents. N > 1 = a
       * touched bucket accumulates up to N-1 DELTA directories (each merge
@@ -113,11 +105,7 @@ final class SnapshotTable(
         meta.map(_.buckets.keys.map(_.toInt).toSet).getOrElse(Set.empty) ++ deltaBuckets
       val clean = allBuckets.filter(b => onlyBuckets.forall(_.contains(b))) -- dirty
       val raw = readRawAt(meta, Some(dirty))
-      val hlcTuple = struct(col(NANOS), col(LOGICAL))
-      val folded = raw
-        .groupBy(pks.map(col): _*)
-        .agg(max_by(struct(raw.columns.map(col): _*), hlcTuple).as("__row"))
-        .select(raw.columns.map(c => col(s"__row.`$c`").as(c)): _*)
+      val folded = maxHlc(raw, pks, raw.columns.toSeq)
       if (clean.isEmpty) folded
       else readRawAt(meta, Some(clean)).unionByName(folded)
     }
@@ -500,7 +488,12 @@ final class SnapshotTable(
     * `batch` must carry the payload columns plus `__hlc_nanos`,
     * `__hlc_logical`, `__deleted`, and should already be LWW-deduped per key
     * (the merge is still correct otherwise — max_by keeps one max-HLC row —
-    * but pre-dedup keeps the shuffle small).
+    * but pre-dedup keeps the shuffle small; a CAS-gated batch needs it, so
+    * the gate sees one candidate per key).
+    *
+    * `casColumns` (the table's compare-and-set columns) gate the batch
+    * against the current rows with [[SnapshotTable.casFilter]]; an empty
+    * list merges by LWW alone.
     *
     * Returns the committed version, or None when `idempotenceKey` was
     * already committed (replay no-op).
@@ -517,10 +510,13 @@ final class SnapshotTable(
     * concurrency, the protocol an Iceberg commit uses. The re-run is
     * correct under any interleaving because the table is an LWW register:
     * re-folding the loser's batch against the winner's committed state
-    * converges to the same rows as any serial order. Each attempt writes
-    * to its OWN uniquely-suffixed data directory, so a doomed attempt can
-    * never clobber the winner's files; orphaned attempt dirs are reclaimed
-    * by [[vacuum]].
+    * converges to the same rows as any serial order. The CAS gate is part
+    * of the attempt, so the re-run also re-gates against the winner's
+    * rows — the reference checks CAS in the upsert statement itself
+    * (queries/conditional.tmpl:48-86). Each attempt writes to its OWN
+    * uniquely-suffixed data directory, so a doomed attempt can never
+    * clobber the winner's files; orphaned attempt dirs are reclaimed by
+    * [[vacuum]].
     */
   def merge(
       batch: DataFrame,
@@ -531,30 +527,37 @@ final class SnapshotTable(
       /** caller-supplied counters persisted alongside the merge metrics
         * (e.g. the replay loop's merged-through staging sequence)
         */
-      extraMetrics: Map[String, Long] = Map.empty
+      extraMetrics: Map[String, Long] = Map.empty,
+      casColumns: Seq[String] = Nil
   ): Option[CommitMeta] = {
     val maxAttempts = 5
     var attempt = 1
     while (true) {
       try
-        return mergeOnce(batch, pkCols, idempotenceKey, resolved, lineage, extraMetrics)
+        return mergeOnce(batch, pkCols, idempotenceKey, resolved, lineage, extraMetrics, casColumns)
       catch {
         case _: SnapshotTable.CommitConflict if attempt < maxAttempts =>
           // lost the version race to a different key: re-read the head and
-          // recompute (the next attempt folds against the winner's state)
+          // recompute (the next attempt gates and folds against the
+          // winner's state)
           attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
+  /** One merge attempt: everything that depends on the head — the CAS
+    * gate, the intake bound, delta-or-compaction, the manifest — is derived
+    * from the ONE head read at its start.
+    */
   private def mergeOnce(
       batch: DataFrame,
       pkCols: Seq[String],
       idempotenceKey: String,
       resolved: Hlc,
       lineage: Seq[String],
-      extraMetrics: Map[String, Long]
+      extraMetrics: Map[String, Long],
+      casColumns: Seq[String]
   ): Option[CommitMeta] = {
     // head FIRST, idempotence check second (see CommitLog.contains): a
     // foreign same-key commit landing between the two is at/below the
@@ -572,26 +575,6 @@ final class SnapshotTable(
     }
     val target = withMeta(evolved)
 
-    // the incoming batch is usually the tail of an expensive pipeline
-    // (staged scan -> drift checks -> transforms -> salted dedup); it is
-    // consumed twice below (touched-bucket discovery + the merge union), so
-    // materialize it once instead of recomputing the lineage
-    val bucketed = batch
-      .withColumn(BUCKET, pmod(xxhash64(pkCols.map(col): _*), lit(numBuckets)).cast(IntegerType))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val alignedBatch = alignTo(bucketed, target)
-
-    val touched: Set[Int] = bucketed
-      .select(BUCKET)
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .toSet
-
-    val prevDeltas = deltasOf(prev)
-    val prevDeltaSchemas: Map[String, String] =
-      prev.flatMap(m => Option(m.deltaSchemas)).getOrElse(Map.empty)
-
     val prevFence = prev.map(_.resolved).getOrElse(Hlc.Zero)
     // the fence never regresses (a replayed old window can merge — its rows
     // no-op against newer LWW state — but must not move the fence backward,
@@ -604,41 +587,210 @@ final class SnapshotTable(
     // order by mtime), so a tombstone must outlive its own fence by at least
     // one generation — otherwise delete@t2 could be GC'd and a late
     // upsert@t1 (t1<t2) would resurrect the deleted key. Every commit
-    // records that fence for its successor: commits that keep the fence
-    // (late applies of a redelivered batch, immediate mode) would
-    // otherwise push it out of the commits vacuum retains, and a horizon
-    // lost that way turns the intake bound below off. A commit without the
-    // record (written before it existed) walks back over the retained
-    // commits instead.
-    val gcHorizon: Hlc = prev
-      .map { p =>
-        (p.metric("prior_fence_nanos"), p.metric("prior_fence_logical")) match {
-          case (Some(n), Some(l)) => Hlc(n, l.toInt)
-          case _ =>
-            var v = p.version - 1
-            var h = Hlc.Zero
-            var continue = true
-            while (continue && v >= 1) {
-              log.tryRead(v) match {
-                case Some(m) if m.resolved < prevFence =>
-                  h = m.resolved; continue = false
-                case Some(_) => v -= 1
-                case None => continue = false // vacuumed past: keep tombstones
-              }
-            }
-            h
-        }
-      }
-      .getOrElse(Hlc.Zero)
+    // records that fence for its successor, so commits that keep the fence
+    // (late applies of a redelivered batch, immediate mode) cannot push it
+    // out of the commits vacuum retains.
+    val recordedHorizon: Option[Hlc] = prev.flatMap(p =>
+      for (n <- p.metric("prior_fence_nanos"); l <- p.metric("prior_fence_logical"))
+        yield Hlc(n, l.toInt))
+    // a later head without the record was written by an older engine: the
+    // intake bound is off for this merge, so say so
+    for (p <- prev if p.version > 1 && recordedHorizon.isEmpty)
+      println(
+        s"[graft] commit ${p.version} of $root records no prior_fence_*: gc horizon " +
+          "taken as zero, late rows are not bounded for this merge"
+      )
+    val gcHorizon: Hlc = recordedHorizon.getOrElse(Hlc.Zero)
     // this commit's record: the newest fence strictly older than `fenceOut`
     val priorFence = if (fenceOut > prevFence) prevFence else gcHorizon
-    val fenceMetrics =
-      Map("prior_fence_nanos" -> priorFence.nanos, "prior_fence_logical" -> priorFence.logical.toLong)
 
-    if (touched.isEmpty) {
-      bucketed.unpersist()
-      // empty batch: still record the fence advance as a metadata-only commit
+    // Intake bound matching the tombstone-GC policy: a batch row at/below
+    // the gcHorizon may be older than a tombstone that compaction already
+    // GC'd, so merging it could resurrect a deleted key. It is dropped AND
+    // counted (`dropped_late`), so the loop's late-delivery tolerance and
+    // the GC window agree exactly and violations are observable.
+    val lateCond =
+      struct(col(NANOS), col(LOGICAL)) <=
+        struct(lit(gcHorizon.nanos), lit(gcHorizon.logical))
+
+    // the incoming batch is usually the tail of an expensive pipeline
+    // (staged scan -> drift checks -> transforms -> salted dedup); it is
+    // consumed by touched-bucket discovery and by the write, so materialize
+    // it once per attempt instead of recomputing the lineage
+    val bucketed = batch
+      .withColumn(BUCKET, pmod(xxhash64(pkCols.map(col): _*), lit(numBuckets)).cast(IntegerType))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ONE pass finds the touched buckets and counts the late rows (every
+      // batch row at/below the horizon, whether or not the CAS gate would
+      // also refuse it). The count is taken here, not on the write: a delta
+      // write whose batch is entirely late folds an empty shuffle, and
+      // adaptive execution then drops the stage — and an observation inside
+      // it — from the plan.
+      val late = if (gcHorizon.isZero) lit(0L) else when(lateCond, 1L).otherwise(0L)
+      val lateByBucket = bucketed.groupBy(BUCKET).agg(sum(late)).collect()
+      val touched: Set[Int] = lateByBucket.map(_.getInt(0)).toSet
+      val droppedLate = lateByBucket.map(_.getLong(1)).sum
+
+      // CAS gate against this attempt's head, pruned to the touched
+      // buckets. No current row to compare against (empty table), or a
+      // committed schema that predates the CAS/PK columns (they arrive
+      // with this very batch): every row passes, like a join miss.
+      val gateable = casColumns.nonEmpty &&
+        prevSchema.exists(s => (pkCols ++ casColumns).forall(s.fieldNames.contains))
+      val gated =
+        if (!gateable) bucketed
+        else casFilter(bucketed, readCurrentAt(prev, Some(touched)).filter(!col(DELETED)),
+          pkCols, casColumns)
+      val alignedBatch = alignTo(gated, target)
+
+      val prevDeltas = deltasOf(prev)
+      val prevDeltaSchemas: Map[String, String] =
+        prev.flatMap(m => Option(m.deltaSchemas)).getOrElse(Map.empty)
+
+      // merge-on-read: while every touched bucket is under its delta cap,
+      // write ONLY the batch's own rows as a new delta generation — no
+      // current-read, no COW rewrite. Any touched bucket at the cap forces a
+      // compaction merge (base ∪ deltas ∪ batch → new base) for all touched.
+      // An empty batch is neither: its manifest is the head's either way.
+      val deltaMode = compactEvery > 1 && prev.nonEmpty && touched.nonEmpty &&
+        touched.forall(b =>
+          prevDeltas.getOrElse(b.toString, Nil).size < compactEvery - 1
+        )
+
+      // ONE shuffle serves both the per-key LWW fold and the (bucket, salt)
+      // write fan-out: `bucket` and the write salt are deterministic
+      // functions of the PK, so grouping by (bucket, salt, pk) yields exactly
+      // the per-pk groups — and an input explicitly repartitioned on
+      // (bucket, salt) already satisfies the aggregation's clustering
+      // requirement (HashPartitioning on a subset of the grouping keys), so
+      // Catalyst inserts NO second exchange between the fold and the write.
+      // The explicit partition count keeps AQE from coalescing the fan-out.
+      val SALT = "__wsalt"
+      def lwwFold(df: DataFrame): DataFrame =
+        maxHlc(
+          df.withColumn(SALT, pmod(xxhash64(pkCols.map(col): _*), lit(WritersPerBucket)))
+            .repartition(math.max(1, touched.size * WritersPerBucket), col(BUCKET), col(SALT)),
+          (Seq(BUCKET, SALT) ++ pkCols).distinct,
+          df.columns.toSeq
+        )
+
+      val boundedBatch =
+        if (gcHorizon.isZero) alignedBatch else alignedBatch.filter(!lateCond)
+
+      val winners =
+        if (deltaMode)
+          // delta merge: per-key LWW within the batch only (keeps the delta
+          // minimal; readers fold across generations). Tombstones are NOT
+          // GC'd here — they must survive until compaction folds them
+          // against any earlier base/delta versions of the key.
+          lwwFold(boundedBatch)
+        else
+          // compaction: fold base ∪ existing deltas of the touched buckets
+          // with the batch, then GC tombstones at/below the lagged horizon
+          // — the intake bound above guarantees nothing older can merge
+          // afterwards
+          lwwFold(alignTo(readRawAt(prev, Some(touched)), target).unionByName(boundedBatch))
+            .filter(
+              !col(DELETED) ||
+                struct(col(NANOS), col(LOGICAL)) >
+                struct(lit(gcHorizon.nanos), lit(gcHorizon.logical))
+            )
+
       val version = prev.map(_.version + 1).getOrElse(1L)
+      // unique per ATTEMPT, not per version: two writers racing on the same
+      // next version must never share a data directory (mode("overwrite")
+      // would silently clobber the winner's files before the commit rename
+      // decides the race). The committed manifest records the full relative
+      // path, so readers never reconstruct it from the version number; a
+      // losing attempt's orphaned dir is reclaimed by vacuum() once its
+      // version is at/below the committed head.
+      val dataRel =
+        f"data/v$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
+      val dataDir = s"$root/$dataRel"
+      // an empty batch writes nothing: its commit records the fence advance
+      // alone. Totals ride the write itself (Observation, 2 aggregates — a
+      // wide per-bucket observe would janino-compile a pathological
+      // method); per-bucket row counts come from the parquet FOOTERS of the
+      // files just written: driver-side metadata reads, no extra Spark
+      // job, exact.
+      val (rowsWritten, tombstones, perBucket) =
+        if (touched.isEmpty) (0L, 0L, Seq.empty[(Int, Long)])
+        else {
+          val obs = org.apache.spark.sql.Observation(
+            s"merge-v$version-${java.util.UUID.randomUUID()}"
+          )
+          winners
+            .observe(
+              obs,
+              count(lit(1)).as("rows"),
+              sum(col(DELETED).cast(LongType)).as("tombstones")
+            )
+            .withColumn("__bp", col(BUCKET))
+            // no repartition here: the fold's (bucket, salt) exchange IS the
+            // write fan-out — a bucket's rewrite spreads over up to
+            // `WritersPerBucket` tasks/files (one hot bucket never serializes
+            // the COW write), and directory (`partitionBy`) writes tolerate
+            // many tasks per partition value.
+            // The map-side PK sort (no shuffle — SortExec inside the existing
+            // partitioning) writes each file in key order: parquet row-group
+            // min/max stats then skip groups on pk point reads, and adjacent
+            // similar keys compress better — both free at write time.
+            // MUST lead with the PARTITION column `__bp`, not BUCKET: V1Writes
+            // requires a sort by the partition columns and REPLACES a user sort
+            // whose prefix is a different attribute — sorting on BUCKET here
+            // silently produced unsorted files (verified file-by-file).
+            .sortWithinPartitions((Seq("__bp") ++ pkCols).distinct.map(col): _*)
+            .write
+            .mode("overwrite")
+            .partitionBy("__bp")
+            .parquet(dataDir)
+          val m = obs.get
+          // an aggregate over zero rows (e.g. the whole batch dropped as
+          // late) observes SQL NULL, not a missing key
+          def asLong(k: String): Long =
+            m.get(k) match {
+              case Some(n: Number) => n.longValue()
+              case _ => 0L
+            }
+          (asLong("rows"), asLong("tombstones"), footerCounts(dataDir))
+        }
+
+      val (finalBuckets, newBucketSchemas, newDeltas, newDeltaSchemas) =
+        if (deltaMode) {
+          // base untouched; register this version's bucket dirs as one more
+          // delta generation per bucket that actually produced rows
+          val appended = prevDeltas ++ perBucket.map { case (b, _) =>
+            val dir = s"$dataRel/__bp=$b"
+            b.toString -> (prevDeltas.getOrElse(b.toString, Nil) :+ dir)
+          }.toMap
+          val ds = prevDeltaSchemas ++ perBucket.map { case (b, _) =>
+            s"$dataRel/__bp=$b" -> evolved.toDDL
+          }.toMap
+          (
+            prev.map(_.buckets).getOrElse(Map.empty),
+            prev.map(_.bucketSchemas).getOrElse(Map.empty),
+            appended,
+            ds
+          )
+        } else {
+          val newBuckets: Map[String, String] =
+            prev.map(_.buckets).getOrElse(Map.empty) ++
+              perBucket.map { case (b, _) => b.toString -> s"$dataRel/__bp=$b" }.toMap
+          // a touched bucket may end up empty (all rows deleted + GC'd): drop it
+          val emptied = touched.map(_.toString) --
+            perBucket.map(_._1.toString).toSet
+          val fb = newBuckets -- emptied
+          val bs = (prev.map(_.bucketSchemas).getOrElse(Map.empty) ++
+            perBucket.map { case (b, _) => b.toString -> evolved.toDDL }.toMap)
+            .filter { case (b, _) => fb.contains(b) }
+          // compaction folds the touched buckets' deltas into the new base
+          val remainingDeltas = prevDeltas -- touched.map(_.toString)
+          val keptDirs = remainingDeltas.values.flatten.toSet
+          val ds = prevDeltaSchemas.filter { case (d, _) => keptDirs.contains(d) }
+          (fb, bs, remainingDeltas, ds)
+        }
+
       val meta = CommitMeta(
         version = version,
         idempotenceKey = idempotenceKey,
@@ -646,240 +798,41 @@ final class SnapshotTable(
         resolvedLogical = fenceOut.logical,
         schemaDdl = evolved.toDDL,
         numBuckets = numBuckets,
-        buckets = prev.map(_.buckets).getOrElse(Map.empty),
-        bucketSchemas = prev.map(_.bucketSchemas).getOrElse(Map.empty),
-        deltas = prevDeltas,
-        deltaSchemas = prevDeltaSchemas,
+        buckets = finalBuckets,
+        bucketSchemas = newBucketSchemas,
+        deltas = newDeltas,
+        deltaSchemas = newDeltaSchemas,
         pkCols = pkCols,
-        metrics = Map("rows_written" -> 0L, "touched_buckets" -> 0L) ++ fenceMetrics ++ extraMetrics,
-        partitionMetrics = Map.empty,
+        metrics = Map(
+          "rows_written" -> rowsWritten,
+          "tombstones" -> tombstones,
+          "live_rows_in_touched_buckets" -> (rowsWritten - tombstones),
+          "touched_buckets" -> touched.size.toLong,
+          "delta_merge" -> (if (deltaMode) 1L else 0L),
+          "dropped_late" -> droppedLate,
+          "prior_fence_nanos" -> priorFence.nanos,
+          "prior_fence_logical" -> priorFence.logical.toLong
+        ) ++ extraMetrics,
+        partitionMetrics =
+          perBucket.map { case (b, n) => b.toString -> n }.toMap,
         lineage = lineage,
         committedAtMs = System.currentTimeMillis()
       )
-      return {
-        if (log.commit(meta)) Some(meta)
-        else if (log.contains(idempotenceKey)) None
-        else throw new SnapshotTable.CommitConflict(version, root)
-      }
-    }
-
-    // merge-on-read: while every touched bucket is under its delta cap,
-    // write ONLY the batch's own rows as a new delta generation — no
-    // current-read, no COW rewrite. Any touched bucket at the cap forces a
-    // compaction merge (base ∪ deltas ∪ batch → new base) for all touched.
-    val deltaMode = compactEvery > 1 && prev.nonEmpty &&
-      touched.forall(b =>
-        prevDeltas.getOrElse(b.toString, Nil).size < compactEvery - 1
-      )
-
-    // compaction reads base ∪ existing deltas of the touched buckets; a
-    // delta merge reads nothing
-    val current =
-      if (deltaMode) None
-      else Some(alignTo(readRaw(Some(touched)), target))
-
-    val hlcTuple = struct(col(NANOS), col(LOGICAL))
-    // ONE shuffle serves both the per-key LWW fold and the (bucket, salt)
-    // write fan-out: `bucket` and the write salt are deterministic
-    // functions of the PK, so grouping by (bucket, salt, pk) yields exactly
-    // the per-pk groups — and an input explicitly repartitioned on
-    // (bucket, salt) already satisfies the aggregation's clustering
-    // requirement (HashPartitioning on a subset of the grouping keys), so
-    // Catalyst inserts NO second exchange between the fold and the write.
-    // The explicit partition count keeps AQE from coalescing the fan-out.
-    val saltCol = pmod(xxhash64(pkCols.map(col): _*), lit(writersPerBucket))
-    val SALT = "__wsalt"
-    def lwwFold(df: DataFrame): DataFrame =
-      df.withColumn(SALT, saltCol)
-        .repartition(
-          math.max(1, touched.size * writersPerBucket),
-          col(BUCKET),
-          col(SALT)
-        )
-        .groupBy((Seq(BUCKET, SALT) ++ pkCols).distinct.map(col): _*)
-        .agg(max_by(struct(df.columns.map(col): _*), hlcTuple).as("__row"))
-        .select(df.columns.map(c => col(s"__row.`$c`").as(c)): _*)
-
-    // Intake bound matching the tombstone-GC policy: a batch row at/below
-    // the gcHorizon may be older than a tombstone that compaction already
-    // GC'd, so merging it could resurrect a deleted key. Drop it AND count
-    // it (`dropped_late`), so the loop's late-delivery tolerance and the GC
-    // window agree exactly and violations are observable. The observation
-    // rides the write job (no extra action).
-    // observation names are matched globally by the listener, so they must
-    // be unique across CONCURRENT merges (MultiTableLoop runs tables of one
-    // FK level in parallel) — a version number alone can collide
-    val lateObs = org.apache.spark.sql.Observation(
-      s"late-${java.util.UUID.randomUUID()}"
-    )
-    val lateCond =
-      struct(col(NANOS), col(LOGICAL)) <=
-        struct(lit(gcHorizon.nanos), lit(gcHorizon.logical))
-    val boundedBatch =
-      if (gcHorizon.isZero) alignedBatch
-      else
-        alignedBatch
-          .observe(lateObs, sum(when(lateCond, 1L).otherwise(0L)).as("dropped_late"))
-          .filter(!lateCond)
-
-    val winners = current match {
-      case None =>
-        // delta merge: per-key LWW within the batch only (keeps the delta
-        // minimal; readers fold across generations). Tombstones are NOT
-        // GC'd here — they must survive until compaction folds them
-        // against any earlier base/delta versions of the key.
-        lwwFold(boundedBatch)
-      case Some(cur) =>
-        // compaction: fold everything, then GC tombstones at/below the
-        // lagged horizon — the intake bound above guarantees nothing older
-        // can merge afterwards
-        lwwFold(cur.unionByName(boundedBatch))
-          .filter(
-            !col(DELETED) ||
-              struct(col(NANOS), col(LOGICAL)) >
-              struct(lit(gcHorizon.nanos), lit(gcHorizon.logical))
-          )
-    }
-
-    val version = prev.map(_.version + 1).getOrElse(1L)
-    // unique per ATTEMPT, not per version: two writers racing on the same
-    // next version must never share a data directory (mode("overwrite")
-    // would silently clobber the winner's files before the commit rename
-    // decides the race). The committed manifest records the full relative
-    // path, so readers never reconstruct it from the version number; a
-    // losing attempt's orphaned dir is reclaimed by vacuum() once its
-    // version is at/below the committed head.
-    val dataRel =
-      f"data/v$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataDir = s"$root/$dataRel"
-    // total metrics ride the write itself (Observation, 2 aggregates — a
-    // wide per-bucket observe would janino-compile a pathological method);
-    // per-bucket row counts come from the parquet FOOTERS of the files just
-    // written: driver-side metadata reads, no extra Spark job, exact.
-    val obs = org.apache.spark.sql.Observation(
-      s"merge-v$version-${java.util.UUID.randomUUID()}"
-    )
-    winners
-      .observe(
-        obs,
-        count(lit(1)).as("rows"),
-        sum(col(DELETED).cast(LongType)).as("tombstones")
-      )
-      .withColumn("__bp", col(BUCKET))
-      // no repartition here: the fold's (bucket, salt) exchange IS the
-      // write fan-out — a bucket's rewrite spreads over up to
-      // `writersPerBucket` tasks/files (one hot bucket never serializes
-      // the COW write), and directory (`partitionBy`) writes tolerate
-      // many tasks per partition value.
-      // The map-side PK sort (no shuffle — SortExec inside the existing
-      // partitioning) writes each file in key order: parquet row-group
-      // min/max stats then skip groups on pk point reads, and adjacent
-      // similar keys compress better — both free at write time.
-      // MUST lead with the PARTITION column `__bp`, not BUCKET: V1Writes
-      // requires a sort by the partition columns and REPLACES a user sort
-      // whose prefix is a different attribute — sorting on BUCKET here
-      // silently produced unsorted files (verified file-by-file).
-      .sortWithinPartitions((Seq("__bp") ++ pkCols).distinct.map(col): _*)
-      .write
-      .mode("overwrite")
-      .partitionBy("__bp")
-      .parquet(dataDir)
-
-    val m = obs.get
-    // an aggregate over zero rows (e.g. the whole batch dropped as late)
-    // observes SQL NULL, not a missing key
-    def asLong(k: String): Long =
-      m.get(k) match {
-        case Some(n: Number) => n.longValue()
-        case _ => 0L
-      }
-    val perBucket: Seq[(Int, Long)] = footerCounts(dataDir)
-    bucketed.unpersist()
-
-    val (finalBuckets, newBucketSchemas, newDeltas, newDeltaSchemas) =
-      if (deltaMode) {
-        // base untouched; register this version's bucket dirs as one more
-        // delta generation per bucket that actually produced rows
-        val appended = prevDeltas ++ perBucket.map { case (b, _) =>
-          val dir = s"$dataRel/__bp=$b"
-          b.toString -> (prevDeltas.getOrElse(b.toString, Nil) :+ dir)
-        }.toMap
-        val ds = prevDeltaSchemas ++ perBucket.map { case (b, _) =>
-          s"$dataRel/__bp=$b" -> evolved.toDDL
-        }.toMap
-        (
-          prev.map(_.buckets).getOrElse(Map.empty),
-          prev.map(_.bucketSchemas).getOrElse(Map.empty),
-          appended,
-          ds
-        )
-      } else {
-        val newBuckets: Map[String, String] =
-          prev.map(_.buckets).getOrElse(Map.empty) ++
-            perBucket.map { case (b, _) => b.toString -> s"$dataRel/__bp=$b" }.toMap
-        // a touched bucket may end up empty (all rows deleted + GC'd): drop it
-        val emptied = touched.map(_.toString) --
-          perBucket.map(_._1.toString).toSet
-        val fb = newBuckets -- emptied
-        val bs = (prev.map(_.bucketSchemas).getOrElse(Map.empty) ++
-          perBucket.map { case (b, _) => b.toString -> evolved.toDDL }.toMap)
-          .filter { case (b, _) => fb.contains(b) }
-        // compaction folds the touched buckets' deltas into the new base
-        val remainingDeltas = prevDeltas -- touched.map(_.toString)
-        val keptDirs = remainingDeltas.values.flatten.toSet
-        val ds = prevDeltaSchemas.filter { case (d, _) => keptDirs.contains(d) }
-        (fb, bs, remainingDeltas, ds)
-      }
-
-    val rowsWritten = asLong("rows")
-    val tombstones = asLong("tombstones")
-    val droppedLate: Long =
-      if (gcHorizon.isZero) 0L
-      else
-        lateObs.get
-          .get("dropped_late")
-          .collect { case n: Number => n.longValue() }
-          .getOrElse(0L)
-
-    val meta = CommitMeta(
-      version = version,
-      idempotenceKey = idempotenceKey,
-      resolvedNanos = fenceOut.nanos,
-      resolvedLogical = fenceOut.logical,
-      schemaDdl = evolved.toDDL,
-      numBuckets = numBuckets,
-      buckets = finalBuckets,
-      bucketSchemas = newBucketSchemas,
-      deltas = newDeltas,
-      deltaSchemas = newDeltaSchemas,
-      pkCols = pkCols,
-      metrics = Map(
-        "rows_written" -> rowsWritten,
-        "tombstones" -> tombstones,
-        "live_rows_in_touched_buckets" -> (rowsWritten - tombstones),
-        "touched_buckets" -> touched.size.toLong,
-        "delta_merge" -> (if (deltaMode) 1L else 0L),
-        "dropped_late" -> droppedLate
-      ) ++ fenceMetrics ++ extraMetrics,
-      partitionMetrics =
-        perBucket.map { case (b, n) => b.toString -> n }.toMap,
-      lineage = lineage,
-      committedAtMs = System.currentTimeMillis()
-    )
-    if (log.commit(meta)) Some(meta)
-    else {
-      // this attempt lost the publication race: its (uniquely-suffixed)
-      // files can never be referenced by any manifest — remove them
-      // eagerly so the loser leaves no orphan behind
-      deleteRecursively(java.nio.file.Paths.get(dataDir))
-      if (log.contains(idempotenceKey)) None
+      if (log.commit(meta)) Some(meta)
       else {
-        // version collision without our key: a concurrent writer with a
-        // DIFFERENT batch won this version — signal merge() to re-run the
-        // whole attempt against the new head (optimistic concurrency)
-        throw new SnapshotTable.CommitConflict(version, root)
+        // this attempt lost the publication race: its (uniquely-suffixed)
+        // files can never be referenced by any manifest — remove them
+        // eagerly so the loser leaves no orphan behind
+        deleteRecursively(java.nio.file.Paths.get(dataDir))
+        if (log.contains(idempotenceKey)) None
+        else {
+          // version collision without our key: a concurrent writer with a
+          // DIFFERENT batch won this version — signal merge() to re-run the
+          // whole attempt against the new head (optimistic concurrency)
+          throw new SnapshotTable.CommitConflict(version, root)
+        }
       }
-    }
+    } finally bucketed.unpersist()
   }
 }
 
@@ -890,6 +843,69 @@ object SnapshotTable {
   val BUCKET = "__bucket"
   val META_COLS: Seq[String] = Seq(NANOS, LOGICAL, DELETED, BUCKET)
   val META_COL_SET: Set[String] = META_COLS.toSet
+
+  /** Write-task fan-out per touched bucket: the merge write repartitions by
+    * `(bucket, pk-hash % WritersPerBucket)`, so a hot or very large bucket
+    * is rewritten by up to this many tasks/files instead of exactly one.
+    * A bucket directory with several part files is already the read path's
+    * normal case, and footer counts sum per-bucket across files.
+    */
+  val WritersPerBucket = 4
+
+  /** The LWW fold: the max-HLC row of every `keys` group, projected back to
+    * `cols`. One definition for the merge-on-read fold and the merge.
+    */
+  private def maxHlc(df: DataFrame, keys: Seq[String], cols: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), struct(col(NANOS), col(LOGICAL))).as("__row"))
+      .select(cols.map(c => col(s"__row.`$c`").as(c)): _*)
+
+  /** Compare-and-set gate against the current table rows: keep an incoming
+    * row iff there is no current row for its key, or its CAS tuple is
+    * strictly greater than the current row's. Deletes pass unconditionally
+    * (the reference's delete path has no CAS — queries/delete.tmpl).
+    * Mirrors queries/conditional.tmpl:48-75; [[SnapshotTable#merge]] runs
+    * it inside each attempt, against that attempt's head, whenever the
+    * table has CAS columns.
+    */
+  def casFilter(
+      batch: DataFrame,
+      current: DataFrame,
+      pkCols: Seq[String],
+      casColumns: Seq[String]
+  ): DataFrame =
+    casJoined(batch, current, pkCols, casColumns)
+      .filter(casCond(casColumns))
+      .drop((casColumns.map(c => s"__cur_$c") :+ "__cur_exists"): _*)
+
+  /** The left join of a batch against current rows that both the CAS filter
+    * and the CAS audit (`ApplyPlanner.casAudit`, harness `q_cas_gate`) gate on —
+    * ONE definition so they cannot drift. Precondition: `current` has at
+    * most one row per key.
+    */
+  private[graft] def casJoined(
+      batch: DataFrame,
+      current: DataFrame,
+      pkCols: Seq[String],
+      casColumns: Seq[String]
+  ): DataFrame = {
+    val curProj = current.select(
+      (pkCols.map(col) ++
+        casColumns.map(c => col(c).as(s"__cur_$c")) :+
+        lit(true).as("__cur_exists")): _*
+    )
+    batch.join(curProj, pkCols, "left")
+  }
+
+  /** The gate predicate over [[casJoined]] output: row passes iff it is a
+    * delete, has no current row, or its CAS tuple strictly beats the
+    * current one.
+    */
+  private[graft] def casCond(casColumns: Seq[String]): Column = {
+    val proposed = struct(casColumns.map(col): _*)
+    val curTuple = struct(casColumns.map(c => col(s"__cur_$c")): _*)
+    col(DELETED) || col("__cur_exists").isNull || proposed > curTuple
+  }
 
   /** Tail a changelog directory written by [[SnapshotTable.emitChangelog]]
     * as a Structured Streaming source: the file source discovers each

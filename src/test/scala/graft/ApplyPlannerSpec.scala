@@ -191,7 +191,7 @@ class ApplyPlannerSpec extends SparkSpec {
       ("r1", "c", 1, false), // no current row: applied
       ("r1", "b", 0, true) // delete: always applied
     ).toDF("repo", "path", "ver", SnapshotTable.DELETED)
-    val got = ApplyPlanner
+    val got = SnapshotTable
       .casFilter(batch, current, Seq("repo", "path"), Seq("ver"))
       .select("repo", "path", "ver")
       .as[(String, String, Int)]
@@ -227,7 +227,7 @@ class ApplyPlannerSpec extends SparkSpec {
     // casFilter-based formulation produces (the shape it replaced)
     import org.apache.spark.sql.functions._
     val accepted =
-      ApplyPlanner.casFilter(batch, current, Seq("repo", "path"), Seq("ver"))
+      SnapshotTable.casFilter(batch, current, Seq("repo", "path"), Seq("ver"))
     val twoPass = batch
       .groupBy("repo", "path")
       .agg(count(lit(1)).as("n_proposed"))

@@ -307,4 +307,46 @@ class ConcurrentWriterSpec extends SparkSpec {
     assert(log.contains("java.lang.IllegalStateException"), log)
     assert(log.contains("condition DIVIDE_BY_ZERO"), log)
   }
+
+  test("CAS under a lost race: the retry re-gates against the winner's head") {
+    val root = tmpDir("cwcas")
+    def verBatch(ver: Int, nanos: Long): DataFrame =
+      Seq(("r", "a", ver, nanos, 0, false))
+        .toDF("repo", "path", "ver", "__hlc_nanos", "__hlc_logical", "__deleted")
+    val a = new SnapshotTable(spark, root, numBuckets = 4)
+    a.merge(verBatch(3, 10L), pk, "k1", Hlc(10, 0), casColumns = Seq("ver"))
+    // the CAS batch (ver=4, the newer HLC) parks inside its first attempt,
+    // after that attempt read its head, until a competitor (ver=5, an
+    // older HLC) has committed: LWW alone would keep ver=4
+    val park = udf((v: Int) => { CasRace.parkOnce(); v }).asNondeterministic()
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val casMerge = pool.submit(() =>
+        a.merge(verBatch(4, 20L).withColumn("ver", park(col("ver"))), pk, "cas-4", Hlc(20, 0),
+          casColumns = Seq("ver")))
+      assert(CasRace.parked.await(60, TimeUnit.SECONDS), "CAS attempt never reached the gate")
+      val b = new SnapshotTable(spark, root, numBuckets = 4)
+      b.merge(verBatch(5, 15L), pk, "competitor-5", Hlc(15, 0), casColumns = Seq("ver"))
+      CasRace.release.countDown()
+      casMerge.get(120, TimeUnit.SECONDS)
+    } finally pool.shutdownNow()
+    assert(a.read().select("ver").as[Int].collect().toSeq == Seq(5))
+    // no commit ever applied a lower CAS tuple over a higher one
+    val vers = a.log.listVersions().map(v => a.readAt(v).select("ver").as[Int].head())
+    assert(vers == vers.sorted, s"CAS column regressed across commits: $vers")
+  }
+}
+
+/** One-shot park for the CAS race: the first evaluation signals `parked`
+  * and waits for `release`; later ones (the retried attempt) pass through.
+  */
+object CasRace {
+  val parked = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+  def parkOnce(): Unit =
+    if (first.compareAndSet(true, false)) {
+      parked.countDown()
+      release.await(120, TimeUnit.SECONDS)
+    }
 }

@@ -15,6 +15,27 @@ class SnapshotTableSpec extends SparkSpec {
 
   private val pk = Seq("repo", "path")
 
+  test("a delta merge whose rows all lie at/below the gc horizon counts them as dropped_late") {
+    val t = new SnapshotTable(spark, tmpDir("snaplate"), numBuckets = 1, compactEvery = 4)
+    Seq(10L, 20L, 30L).zipWithIndex.foreach { case (ts, i) =>
+      t.merge(batch(Seq(("r", s"p$i", "v", ts, 0, false))), pk, s"k$i", Hlc(ts, 0))
+    }
+    // horizon is fence 20: both rows are late, the whole delta batch drops
+    val whole = t.merge(
+      batch(Seq(("r", "x", "v", 15L, 0, false), ("r", "y", "v", 5L, 0, false))),
+      pk, "late-all", Hlc(30, 0)).get
+    assert(whole.metric("delta_merge").contains(1L))
+    assert(whole.metric("rows_written").contains(0L))
+    assert(whole.metric("dropped_late").contains(2L))
+    // a partly late batch: one dropped, one written
+    val part = t.merge(
+      batch(Seq(("r", "z", "v", 25L, 0, false), ("r", "w", "v", 5L, 0, false))),
+      pk, "late-part", Hlc(30, 0)).get
+    assert(part.metric("rows_written").contains(1L))
+    assert(part.metric("dropped_late").contains(1L))
+    assert(t.read().count() == 4)
+  }
+
   test("merge + read round-trip, idempotent replay, LWW vs table") {
     val t = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 8)
     val b1 = batch(
@@ -123,6 +144,30 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!t.read().select("repo").as[String].collect().contains("r1"))
   }
 
+  test("a head commit without a prior_fence record logs that the intake bound is off") {
+    val t = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 1)
+    Seq(10L, 20L, 30L).zipWithIndex.foreach { case (ts, i) =>
+      t.merge(batch(Seq(("r", s"p$i", "v", ts, 0, false))), pk, s"k$i", Hlc(ts, 0))
+    }
+    // rewrite the head as an engine that did not record the field would have
+    val head = t.log.latest().get
+    val file = java.nio.file.Paths.get(t.root, "commits", f"${head.version}%020d.json").toFile
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+      .writeValue(file, head.copy(metrics = head.metrics -- Seq("prior_fence_nanos", "prior_fence_logical")))
+    val out = new java.io.ByteArrayOutputStream()
+    val m = Console.withOut(out)(
+      t.merge(batch(Seq(("r", "x", "v", 5L, 0, false))), pk, "k3", Hlc(30, 0))).get
+    assert(out.toString("UTF-8").contains(s"commit ${head.version} of ${t.root} records no prior_fence_*"))
+    // with the record the row@5 would be dropped (horizon 20); here it merges
+    assert(m.metric("dropped_late").contains(0L))
+    // the new head carries the record again: no warning on the next merge
+    val quiet = new java.io.ByteArrayOutputStream()
+    Console.withOut(quiet)(
+      t.merge(batch(Seq(("r", "y", "v", 40L, 0, false))), pk, "k4", Hlc(40, 0)))
+    assert(!quiet.toString("UTF-8").contains("prior_fence"))
+  }
+
   test("merge-on-read reads are bucket-local: delta-free buckets read with no shuffle") {
     val t = new SnapshotTable(spark, tmpDir("morlocal"), numBuckets = 8, compactEvery = 4)
     t.merge(batch((0 until 64).map(i => (s"r$i", "p", "v1", 10L, 0, false))), pk, "k1", Hlc(10, 0))
@@ -144,7 +189,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("hot-bucket writes fan out over multiple files (writersPerBucket)") {
-    val t = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 1, writersPerBucket = 4)
+    val t = new SnapshotTable(spark, tmpDir("snap"), numBuckets = 1)
     val big = batch((0 until 400).map(i => (s"r$i", s"p$i", "v", 10L, 0, false)))
     val meta = t.merge(big, pk, "k1", Hlc(10, 0)).get
     // one bucket, but the write produced several part files inside it

@@ -48,31 +48,6 @@ class StagedStoreSpec extends SparkSpec {
     assert(!st.append(replay, batchId = 30L))
   }
 
-  test("legacy per-marker field sets survive when the first post-upgrade call is an append") {
-    // pre-compaction stores kept the field universe in per-batch markers;
-    // the loop's first post-upgrade action is stage.append (NOT
-    // observedFields), so the fold into _fields must happen on the first
-    // recordFields write or staged-but-unmerged legacy batches lose their
-    // fields and schema evolution silently drops their columns
-    val root = tmpDir("stageleg")
-    val markers = Paths.get(root, "_batch_markers")
-    Files.createDirectories(markers)
-    Files.writeString(
-      markers.resolve("7"),
-      """{"fields":["pk","legacy_col"]}"""
-    )
-
-    val st = new StagedStore(spark, root, bucketNanos = 100L)
-    val muts = Seq(("[1]", """{"pk":1,"new_col":2}""", 10L, 0, "f"))
-      .toDF("key", "data", "nanos", "logical", "src_file")
-    st.append(muts, batchId = 100L, validatePk = Some((1, Seq("pk"))))
-
-    assert(
-      st.observedFields() == Set("pk", "legacy_col", "new_col"),
-      "legacy marker fields must fold into _fields on the first write"
-    )
-  }
-
   test("a drift-rejected append stages nothing, so retries never pile up copies") {
     val st = new StagedStore(spark, tmpDir("stagedrift"), bucketNanos = 100L)
     // key arity 1 against a 2-column PK
