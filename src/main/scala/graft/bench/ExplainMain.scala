@@ -61,6 +61,19 @@ object ExplainMain {
       println("=== MOR full read (expect the max_by fold over the " +
         s"${dirty.size} dirty bucket(s) only, unioned with raw clean buckets) ===")
       t.readCurrent().explain("formatted")
+      // a delta in EVERY bucket: the fold groups by (bucket, pk) over one
+      // scan that keeps each bucket in its own input partition, so it plans
+      // inside each bucket's task — expect NO Exchange below the fold
+      t.merge(
+        (0 until 64)
+          .map(i => (s"r$i", "p", "v3", 30L, 0, false))
+          .toDF("repo", "path", "content", "__hlc_nanos", "__hlc_logical", "__deleted"),
+        Seq("repo", "path"), "k3", Hlc(30, 0)
+      )
+      val allDirty = t.log.latest().get.deltas.count(_._2.nonEmpty)
+      println(s"=== MOR read with deltas in all $allDirty buckets " +
+        "(expect ONE BatchScan under the max_by fold, NO Exchange) ===")
+      t.readCurrent().explain("formatted")
     }
 
     println("=== salted LWW dedup (expect 2 aggregate phases, no Window) ===")

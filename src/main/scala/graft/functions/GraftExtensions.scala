@@ -60,5 +60,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           }
       )
     )
+    e.injectFunction(
+      (
+        FunctionIdentifier("graft_quality_counts"),
+        info("graft_quality_counts", "graft_quality_counts(text) - one-pass text-feature counts"),
+        (exprs: Seq[Expression]) => QualityCounts(exprs.head)
+      )
+    )
   }
 }

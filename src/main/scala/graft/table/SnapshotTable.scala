@@ -80,13 +80,14 @@ final class SnapshotTable(
   /** One CURRENT row per key (max-HLC fold over base ∪ deltas), incl.
     * HLC/tombstone metadata. Equal to [[readRaw]] when no deltas exist.
     *
-    * The fold is BUCKET-LOCAL: only buckets that actually carry deltas go
-    * through the per-key `max_by` shuffle; delta-free buckets are unioned
-    * raw — their base files are themselves fold results (one max-HLC row
-    * per key by construction), and a key lives in exactly one bucket, so
-    * the split cannot change the answer. At scale this keeps read cost
-    * proportional to delta-bearing data instead of turning every read into
-    * a full-table shuffle the moment ANY bucket holds a delta.
+    * The fold is BUCKET-LOCAL: only buckets that actually carry deltas are
+    * folded; delta-free buckets are unioned raw — their base files are
+    * themselves fold results (one max-HLC row per key by construction). The
+    * dirty buckets are read as one [[BucketScan]] that reports one input
+    * partition per bucket, and a key lives in exactly one bucket, so the
+    * per-key `max_by` grouped by bucket and key runs inside each bucket's own
+    * task with no exchange: read cost stays proportional to delta-bearing
+    * data and never shuffles it.
     */
   def readCurrent(onlyBuckets: Option[Set[Int]] = None): DataFrame =
     readCurrentAt(log.latest(), onlyBuckets)
@@ -104,8 +105,12 @@ final class SnapshotTable(
       val allBuckets: Set[Int] =
         meta.map(_.buckets.keys.map(_.toInt).toSet).getOrElse(Set.empty) ++ deltaBuckets
       val clean = allBuckets.filter(b => onlyBuckets.forall(_.contains(b))) -- dirty
-      val raw = readRawAt(meta, Some(dirty))
-      val folded = maxHlc(raw, pks, raw.columns.toSeq)
+      val m = meta.get
+      val raw = BucketScan.read(spark, root, withMeta(StructType.fromDDL(m.schemaDdl)),
+        dirsOf(m, Some(dirty)).groupBy(_._1).toSeq.sortBy(_._1).map { case (b, ds) =>
+          b -> ds.map { case (_, ddl, rel) => ddl -> s"$root/$rel" }
+        })
+      val folded = maxHlc(raw, BUCKET +: pks, raw.columns.toSeq)
       if (clean.isEmpty) folded
       else readRawAt(meta, Some(clean)).unionByName(folded)
     }
@@ -220,8 +225,10 @@ final class SnapshotTable(
     * [[changesBetween]]).
     *
     * Segment `v%08d` holds `changesBetween(v-1, v)` (pks + payload +
-    * `change_type`); the first retained version bootstraps as
-    * all-inserts. Emission is IDEMPOTENT and crash-safe: every call
+    * `change_type`); into an empty `outDir` the oldest retained version
+    * bootstraps as all-inserts, and a directory whose segments stop short
+    * of the oldest retained commit throws (its missing deletes cannot be
+    * published). Emission is IDEMPOTENT and crash-safe: every call
     * emits all committed versions missing from `outDir` (self-healing
     * when a crash lands between commit and emission), each segment is
     * fully written to a temp name then atomically moved, and a lost
@@ -257,9 +264,9 @@ final class SnapshotTable(
       .toSet
     var wrote = 0
     versions.filterNot(emitted.contains).foreach { v =>
-      val seg: Option[DataFrame] =
-        if (log.tryRead(v - 1).isDefined) Some(changesBetween(v - 1, v))
-        else if (v == versions.min) {
+      val seg: DataFrame =
+        if (log.tryRead(v - 1).isDefined) changesBetween(v - 1, v)
+        else if (!emitted.exists(_ < v)) {
           // bootstrap: the first retained version's visible rows are the
           // inserts a from-nothing consumer must see
           val m = metaAtOrThrow(v)
@@ -269,32 +276,36 @@ final class SnapshotTable(
             .fieldNames
             .toSeq
             .filterNot(pks.contains)
-          Some(
-            readAt(v).select(
-              (pks ++ payloadCols).map(col) :+ lit("insert").as("change_type"): _*
-            )
+          readAt(v).select(
+            (pks ++ payloadCols).map(col) :+ lit("insert").as("change_type"): _*
           )
-        } else None // predecessor vacuumed mid-history: diff unreconstructable
-      seg.foreach { df0 =>
-        val df = df0.withColumn("commit_version", lit(v))
-        val tmp =
-          out.resolve(s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        try {
-          java.nio.file.Files.move(
-            tmp,
-            out.resolve(f"v$v%08d"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE
+        } else
+          // the consumer holds older segments, but the commit this one must
+          // diff against is vacuumed: an all-inserts segment would drop the
+          // deletes in between, so the changelog cannot continue
+          throw new IllegalStateException(
+            s"changelog $outDir ends at v${emitted.filter(_ < v).max} but commit " +
+              s"${v - 1} of $root is vacuumed: the changes up to v$v cannot be " +
+              "published; re-bootstrap the consumer from an empty directory"
           )
-          wrote += 1
-        } catch {
-          // another emitter published this segment first (same content by
-          // construction) — drop ours
-          case _: java.nio.file.FileAlreadyExistsException =>
-            deleteRecursively(tmp)
-          case _: java.nio.file.DirectoryNotEmptyException =>
-            deleteRecursively(tmp)
-        }
+      val df = seg.withColumn("commit_version", lit(v))
+      val tmp =
+        out.resolve(s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      df.write.mode("overwrite").parquet(tmp.toString)
+      try {
+        java.nio.file.Files.move(
+          tmp,
+          out.resolve(f"v$v%08d"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE
+        )
+        wrote += 1
+      } catch {
+        // another emitter published this segment first (same content by
+        // construction) — drop ours
+        case _: java.nio.file.FileAlreadyExistsException =>
+          deleteRecursively(tmp)
+        case _: java.nio.file.DirectoryNotEmptyException =>
+          deleteRecursively(tmp)
       }
     }
     wrote
@@ -328,24 +339,11 @@ final class SnapshotTable(
         )
       case Some(meta) =>
         val target = withMeta(StructType.fromDDL(meta.schemaDdl))
-        val chosen = meta.buckets.filter { case (b, _) =>
-          onlyBuckets.forall(_.contains(b.toInt))
-        }
-        val deltaSchemaOf: Map[String, String] =
-          Option(meta.deltaSchemas).getOrElse(Map.empty)
-        val chosenDeltas: Seq[(String, String)] = deltasOf(Some(meta)).toSeq
-          .filter { case (b, _) => onlyBuckets.forall(_.contains(b.toInt)) }
-          .flatMap { case (_, dirs) =>
-            dirs.map(d => deltaSchemaOf.getOrElse(d, meta.schemaDdl) -> d)
-          }
         // group dirs (base + delta) by the schema their files carry; read
         // each group with its own (exact) schema, then cast up to the
         // current snapshot schema — old files are never rewritten on
         // evolution
-        val entries: Seq[(String, String)] =
-          chosen.toSeq.map { case (b, rel) =>
-            meta.bucketSchemas.getOrElse(b, meta.schemaDdl) -> rel
-          } ++ chosenDeltas
+        val entries = dirsOf(meta, onlyBuckets)
         if (entries.isEmpty) {
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -353,10 +351,10 @@ final class SnapshotTable(
           )
         } else {
           entries
-            .groupBy(_._1)
+            .groupBy(_._2)
             .map { case (ddl, group) =>
               val fileSchema = withMeta(StructType.fromDDL(ddl))
-              val paths = group.map { case (_, rel) => s"$root/$rel" }
+              val paths = group.map { case (_, _, rel) => s"$root/$rel" }
               val df = spark.read.schema(fileSchema).parquet(paths: _*)
               alignTo(df, target)
             }
@@ -365,18 +363,38 @@ final class SnapshotTable(
     }
   }
 
+  /** The base and delta directories of `meta`'s buckets (optionally only
+    * `onlyBuckets`), each as `(bucket, schema DDL its files carry, path
+    * relative to the root)`.
+    */
+  private def dirsOf(meta: CommitMeta, onlyBuckets: Option[Set[Int]]): Seq[(Int, String, String)] = {
+    val deltaSchemaOf = Option(meta.deltaSchemas).getOrElse(Map.empty[String, String])
+    val bases = meta.buckets.toSeq.map { case (b, rel) =>
+      (b.toInt, meta.bucketSchemas.getOrElse(b, meta.schemaDdl), rel)
+    }
+    val deltas = deltasOf(Some(meta)).toSeq.flatMap { case (b, ds) =>
+      ds.map(d => (b.toInt, deltaSchemaOf.getOrElse(d, meta.schemaDdl), d))
+    }
+    (bases ++ deltas).filter { case (b, _, _) => onlyBuckets.forall(_.contains(b)) }
+  }
+
   private def deltasOf(meta: Option[CommitMeta]): Map[String, Seq[String]] =
     meta.flatMap(m => Option(m.deltas)).getOrElse(Map.empty)
 
   def payloadSchema(): Option[StructType] =
     log.latest().map(m => StructType.fromDDL(m.schemaDdl))
 
-  /** Delete data directories no commit among the newest `keepVersions`
-    * references, and drop the superseded commit files: the storage-reclaim
+  /** Drop the superseded commit files, then delete data directories no
+    * commit among the newest `keepVersions` references: the storage-reclaim
     * step a long-running table needs (the snapshot analog of staged-mutation
     * retirement; Iceberg calls it expire_snapshots). Never touches
     * directories the retained manifests still point to — copy-on-write
     * means an old version dir can still serve CURRENT buckets.
+    *
+    * Commit files go FIRST: a crash between the two steps leaves data
+    * directories no commit references (the next vacuum reaps them past the
+    * orphan grace period), never a commit that [[readAt]] or
+    * [[emitChangelog]] would trust but whose files are gone.
     * Returns the number of data directories removed.
     */
   def vacuum(keepVersions: Int = 2, orphanGraceMillis: Long = 3600000L): Int = {
@@ -400,6 +418,15 @@ final class SnapshotTable(
     // commit rename), told apart conservatively: never reap above the
     // committed head, and below it only past a grace period
     val everReferenced = dirsOf(versions)
+    // retire the superseded commit files (keep the ledger compact);
+    // idempotence keys of retired commits are forgotten — acceptable
+    // because replays older than the retained horizon are screened by the
+    // fence and the LWW register anyway
+    versions.dropRight(keepVersions).foreach { v =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(root, "commits", f"$v%020d.json")
+      )
+    }
     val dataRoot = java.nio.file.Paths.get(root, "data")
     if (!java.nio.file.Files.exists(dataRoot)) return 0
     var removed = 0
@@ -431,15 +458,6 @@ final class SnapshotTable(
         deleteRecursively(d)
         removed += 1
       }
-    }
-    // retire the superseded commit files too (keep the ledger compact);
-    // idempotence keys of retired commits are forgotten — acceptable
-    // because replays older than the retained horizon are screened by the
-    // fence and the LWW register anyway
-    versions.dropRight(keepVersions).foreach { v =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(root, "commits", f"$v%020d.json")
-      )
     }
     removed
   }
@@ -621,16 +639,16 @@ final class SnapshotTable(
       .withColumn(BUCKET, pmod(xxhash64(pkCols.map(col): _*), lit(numBuckets)).cast(IntegerType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE pass finds the touched buckets and counts the late rows (every
+      // ONE pass counts the rows and the late rows of every bucket (every
       // batch row at/below the horizon, whether or not the CAS gate would
-      // also refuse it). The count is taken here, not on the write: a delta
-      // write whose batch is entirely late folds an empty shuffle, and
-      // adaptive execution then drops the stage — and an observation inside
-      // it — from the plan.
+      // also refuse it). A bucket is touched only if a row of it lies above
+      // the horizon: a batch that is entirely late touches nothing, writes
+      // nothing and commits the head's manifest with its `dropped_late`.
       val late = if (gcHorizon.isZero) lit(0L) else when(lateCond, 1L).otherwise(0L)
-      val lateByBucket = bucketed.groupBy(BUCKET).agg(sum(late)).collect()
-      val touched: Set[Int] = lateByBucket.map(_.getInt(0)).toSet
-      val droppedLate = lateByBucket.map(_.getLong(1)).sum
+      val byBucket = bucketed.groupBy(BUCKET).agg(count(lit(1)), sum(late)).collect()
+      val touched: Set[Int] =
+        byBucket.filter(r => r.getLong(1) > r.getLong(2)).map(_.getInt(0)).toSet
+      val droppedLate = byBucket.map(_.getLong(2)).sum
 
       // CAS gate against this attempt's head, pruned to the touched
       // buckets. No current row to compare against (empty table), or a
@@ -652,7 +670,8 @@ final class SnapshotTable(
       // write ONLY the batch's own rows as a new delta generation — no
       // current-read, no COW rewrite. Any touched bucket at the cap forces a
       // compaction merge (base ∪ deltas ∪ batch → new base) for all touched.
-      // An empty batch is neither: its manifest is the head's either way.
+      // A batch that touches nothing (empty, or entirely late) is neither:
+      // its manifest is the head's either way.
       val deltaMode = compactEvery > 1 && prev.nonEmpty && touched.nonEmpty &&
         touched.forall(b =>
           prevDeltas.getOrElse(b.toString, Nil).size < compactEvery - 1
@@ -708,8 +727,8 @@ final class SnapshotTable(
       val dataRel =
         f"data/v$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
       val dataDir = s"$root/$dataRel"
-      // an empty batch writes nothing: its commit records the fence advance
-      // alone. Totals ride the write itself (Observation, 2 aggregates — a
+      // a batch that touches nothing writes nothing: its commit records the
+      // fence advance (and any dropped late rows) alone. Totals ride the write itself (Observation, 2 aggregates — a
       // wide per-bucket observe would janino-compile a pathological
       // method); per-bucket row counts come from the parquet FOOTERS of the
       // files just written: driver-side metadata reads, no extra Spark
@@ -855,7 +874,7 @@ object SnapshotTable {
   /** The LWW fold: the max-HLC row of every `keys` group, projected back to
     * `cols`. One definition for the merge-on-read fold and the merge.
     */
-  private def maxHlc(df: DataFrame, keys: Seq[String], cols: Seq[String]): DataFrame =
+  private[graft] def maxHlc(df: DataFrame, keys: Seq[String], cols: Seq[String]): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(max_by(struct(cols.map(col): _*), struct(col(NANOS), col(LOGICAL))).as("__row"))
       .select(cols.map(c => col(s"__row.`$c`").as(c)): _*)

@@ -289,4 +289,82 @@ class ChangelogEmitSpec extends SparkSpec {
       .toSet
     assert(childTypes.contains("delete"))
   }
+
+  test("changelog over a vacuumed table, and after a crash between vacuum's two steps") {
+    val base = tmpDir("clvac")
+    val cl = s"$base/changelog"
+    val t = new SnapshotTable(spark, s"$base/table", numBuckets = 4, compactEvery = 3)
+    val schema = StructType.fromDDL(
+      "repo STRING, path STRING, commit STRING, lang STRING, content STRING, " +
+        "__hlc_nanos BIGINT, __hlc_logical INT, __deleted BOOLEAN"
+    )
+    val rnd = new scala.util.Random(77)
+    def mergeNext(v: Int): Unit = {
+      val rows = (0 until 12).map { _ =>
+        val k = rnd.nextInt(30)
+        val del = rnd.nextInt(4) == 0
+        org.apache.spark.sql.Row(s"r${k % 3}", s"p$k", if (del) null else s"c$v",
+          "scala", if (del) null else s"v$v-$k", v * 100L + k, 0, del)
+      }.groupBy(r => (r.getString(0), r.getString(1))).values.map(_.head).toSeq
+      val df = spark.createDataFrame(java.util.List.of(rows: _*), schema)
+      t.merge(df, Seq("repo", "path"), s"k$v", graft.model.Hlc(v * 100L + 99, 0))
+    }
+    def dataDirs: Set[String] =
+      Files.list(Paths.get(t.root, "data")).iterator().asScala
+        .map(p => s"data/${p.getFileName}").toSet
+    def referencedDirs: Set[String] =
+      t.log.listVersions().flatMap(t.log.tryRead).flatMap { m =>
+        (m.buckets.values ++ Option(m.deltas).getOrElse(Map.empty).values.flatten)
+          .map(_.split("/").take(2).mkString("/"))
+      }.toSet
+
+    // the loop's order per fence: commit, emit, vacuum; a second consumer
+    // stops emitting after v2
+    val lagging = s"$base/lagging"
+    (1 to 8).foreach { v =>
+      mergeNext(v)
+      t.emitChangelog(cl)
+      if (v <= 2) t.emitChangelog(lagging)
+      t.vacuum(keepVersions = 2)
+      // every retained commit's files are all there
+      assert(referencedDirs.subsetOf(dataDirs))
+    }
+    assert(t.log.listVersions() == Seq(7L, 8L))
+    assert(segmentDirs(cl).map(_._1) == (1L to 8L))
+    assert(foldSegments(cl) == tableState(t))
+    assert(intercept[IllegalArgumentException](t.readAt(6)).getMessage.contains("vacuumed"))
+    // v3..v6 are gone: the lagging consumer cannot be continued, and a new
+    // one bootstraps from the oldest retained version
+    assert(intercept[IllegalStateException](t.emitChangelog(lagging))
+      .getMessage.contains("ends at v2"))
+    assert(segmentDirs(lagging).map(_._1) == Seq(1L, 2L))
+    val fresh = s"$base/fresh"
+    assert(t.emitChangelog(fresh) == 2)
+    assert(foldSegments(fresh) == tableState(t))
+
+    // a vacuum that crashed after retiring the superseded commit files and
+    // before reaping their data: the retained commits read and diff as
+    // before, and the leftover directories are orphans the grace rule reaps
+    (9 to 10).foreach { v => mergeNext(v); t.emitChangelog(cl) }
+    val heldAt10 = t.readAt(10).collect().map(_.toString).sorted.toSeq
+    val keep = Seq(9L, 10L)
+    t.log.listVersions().filterNot(keep.contains).foreach { v =>
+      Files.delete(Paths.get(t.root, "commits", f"$v%020d.json"))
+    }
+    val leftover = dataDirs -- referencedDirs
+    assert(leftover.nonEmpty)
+    assert(t.readAt(10).collect().map(_.toString).sorted.toSeq == heldAt10)
+    mergeNext(11)
+    assert(t.emitChangelog(cl) == 1)
+    assert(segmentDirs(cl).map(_._1) == (1L to 11L))
+    assert(foldSegments(cl) == tableState(t))
+    // inside the grace period the orphans stay; past it they are reaped
+    t.vacuum(keepVersions = 2)
+    assert(leftover.subsetOf(dataDirs))
+    mergeNext(12)
+    t.emitChangelog(cl)
+    t.vacuum(keepVersions = 2, orphanGraceMillis = 0L)
+    assert(dataDirs == referencedDirs)
+    assert(foldSegments(cl) == tableState(t))
+  }
 }

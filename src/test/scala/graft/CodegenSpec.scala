@@ -47,7 +47,8 @@ class CodegenSpec extends SparkSpec {
           GraftFunctions.minhash(concat(col("t"), lit("x")), 5, 8)
         )
         .as("sa"),
-      GraftFunctions.shingleHashes(col("t"), 5).as("shh")
+      GraftFunctions.shingleHashes(col("t"), 5).as("shh"),
+      GraftFunctions.qualityCounts(col("t")).as("qc")
     )
 
     val cg = org.apache.spark.sql.execution.debug.codegenString(
@@ -60,7 +61,8 @@ class CodegenSpec extends SparkSpec {
       "Bpe.tokenCount",
       "JsonDropKeys.strip",
       "SigAgree.agree",
-      "ShingleHashes.hashes"
+      "ShingleHashes.hashes",
+      "QualityCounts.counts"
     ).foreach { kernel =>
       assert(cg.contains(kernel), s"$kernel not in generated code:\n${cg.take(2000)}")
     }
@@ -77,6 +79,7 @@ class CodegenSpec extends SparkSpec {
       val sa = r.getAs[Int]("sa")
       assert(sa >= 0 && sa <= 8)
       assert(r.getSeq[Long](r.fieldIndex("shh")).nonEmpty)
+      assert(!r.isNullAt(r.fieldIndex("qc")))
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
 

@@ -24,7 +24,8 @@ class SnapshotTableSpec extends SparkSpec {
     val whole = t.merge(
       batch(Seq(("r", "x", "v", 15L, 0, false), ("r", "y", "v", 5L, 0, false))),
       pk, "late-all", Hlc(30, 0)).get
-    assert(whole.metric("delta_merge").contains(1L))
+    // nothing left to merge: no delta generation is written
+    assert(whole.metric("delta_merge").contains(0L))
     assert(whole.metric("rows_written").contains(0L))
     assert(whole.metric("dropped_late").contains(2L))
     // a partly late batch: one dropped, one written
@@ -34,6 +35,28 @@ class SnapshotTableSpec extends SparkSpec {
     assert(part.metric("rows_written").contains(1L))
     assert(part.metric("dropped_late").contains(1L))
     assert(t.read().count() == 4)
+  }
+
+  test("a batch whose rows all lie at/below the gc horizon touches no bucket and writes nothing") {
+    Seq(1, 4).foreach { every =>
+      val t = new SnapshotTable(spark, tmpDir("snapalllate"), numBuckets = 4, compactEvery = every)
+      Seq(10L, 20L, 30L).zipWithIndex.foreach { case (ts, i) =>
+        t.merge(batch(Seq((s"r$i", "p", "v", ts, 0, false))), pk, s"k$i", Hlc(ts, 0))
+      }
+      val head = t.log.latest().get
+      // horizon is fence 20: six rows over several buckets, all of them late
+      val late = batch((0 until 6).map(i => (s"r$i", "x", "v", 5L + i, 0, false)))
+      var m: Option[graft.table.CommitMeta] = None
+      val (_, plans) = jobShape { m = t.merge(late, pk, "late-all", Hlc(30, 0)) }
+      assert(!plans.exists(_.contains("InsertIntoHadoopFsRelationCommand")),
+        s"an all-late batch must not write (compactEvery=$every):\n${plans.mkString("\n")}")
+      val c = m.get
+      assert(c.metric("touched_buckets").contains(0L))
+      assert(c.metric("dropped_late").contains(6L))
+      assert(c.metric("rows_written").contains(0L))
+      assert(c.buckets == head.buckets && c.deltas == head.deltas)
+      assert(t.read().count() == 3)
+    }
   }
 
   test("merge + read round-trip, idempotent replay, LWW vs table") {
